@@ -1,6 +1,21 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** 3-decimal seconds on the stdout line (r18 verdict #2): a harness
+    * capturing the bench keeps only a bounded stdout TAIL, and the full-precision
+    * line (390 keys × 9+ digit doubles ≈ 13 KB) has been cut mid-line —
+    * and therefore unparseable — in EVERY round's capture (parsed: null in
+    * r01/r17/r18). 1 ms resolution loses nothing a medians-of-seconds
+    * comparison uses; trailing zeros are trimmed too. The key names alone
+    * are 6.6 KB (the contract forbids renaming), so this is the floor.
+    * Locale.ROOT: the line is JSON whatever the JVM's default locale — a
+    * comma-decimal locale would otherwise print `1,234`. */
+  private[graft] def fmt3(v: Double): String = {
+    val s = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val t = s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
+    if (t.isEmpty) "0" else t
+  }
+
   /** Output-path resolution (r13 verdict #5): an EXPLICIT `GRAFT_BENCH_OUT`
     * is honored verbatim — the caller owns that path and may overwrite it.
     * The DEFAULT is always a fresh UTC-stamped name (`bench_<stamp>[_n]
@@ -96,21 +111,6 @@ object Bench {
       val okTimes = times.collect { case (t, true) => t }.sorted
       if (okTimes.nonEmpty) (name, okTimes(okTimes.length / 2), true, snapshotServed)
       else (name, times.map(_._1).min, false, snapshotServed)
-    }
-    // 3-decimal seconds on the stdout line (r18 verdict #2): the driver's
-    // BENCH capture keeps only a bounded stdout TAIL, and the full-precision
-    // line (390 keys × 9+ digit doubles ≈ 13 KB) has been cut mid-line —
-    // and therefore unparseable — in EVERY round's capture (parsed: null in
-    // r01/r17/r18). 1 ms resolution loses nothing a medians-of-seconds
-    // comparison uses; trailing zeros are trimmed too. The key names alone
-    // are 6.6 KB (the contract forbids renaming), so this is the floor.
-    def fmt3(v: Double): String = {
-      val s = f"$v%.3f"
-      if (!s.contains('.')) s
-      else {
-        val t = s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
-        if (t.isEmpty) "0" else t
-      }
     }
     val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + fmt3(v) }
       .mkString("{", ",", "}")

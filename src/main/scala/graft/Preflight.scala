@@ -19,8 +19,11 @@ object Preflight {
       // The events loader is the one surface that has actually broken on an
       // engine upgrade — probe a ts-consuming plan end to end (analysis +
       // execution), not just the read.
-      val r = T(spark, sfDir, "events")
-        .agg(count(lit(1)).as("n"), max(col("ts")).as("mx")).head()
+      val events = T(spark, sfDir, "events")
+      require(events.schema("ts").dataType ==
+        org.apache.spark.sql.types.TimestampType,
+        s"events.ts loads as ${events.schema("ts").dataType.simpleString}, want timestamp")
+      val r = events.agg(count(lit(1)).as("n"), max(col("ts")).as("mx")).head()
       require(r.getLong(0) > 0, s"events table at $sfDir is empty")
       require(!r.isNullAt(1), "events.ts read back all-NULL")
       // The mm_* real-decode keys synthesize containers from text bytes

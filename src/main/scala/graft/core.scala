@@ -27,29 +27,17 @@ object T {
     "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts is parquet TIMESTAMP(NANOS). Depending on the Spark build,
-    // it is read either as raw nanos BIGINT (when
-    // spark.sql.legacy.parquet.nanosAsLong applies, Spark <= 4.0) or
-    // natively as TimestampNTZType (Spark >= 4.1). Dispatch on the actual
-    // read type and normalize both to a µs-truncated TimestampType — the
-    // same truncation every oracle assumes (SURVEY §7.4.2). `div` keeps the
-    // math in exact integer space (1.7e18 ns overflows double precision);
-    // the NTZ wall-clock maps to the same instants because the session TZ
-    // is UTC (set in Spark.session / Verify / Bench builders).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events.ts is parquet TIMESTAMP(NANOS), which Spark 4.1 reads as
+    // TimestampNTZType. Normalize it to a µs-truncated TimestampType — the
+    // same truncation every oracle assumes (SURVEY §7.4.2). The NTZ
+    // wall-clock maps to the same instants because the session TZ is UTC
+    // (every graft entry point configures UTC); Preflight fails loudly if
+    // a Spark upgrade changes how the column surfaces.
     val df = spark.read.parquet(s"$dir/$name.parquet")
-    if (name == "events") {
-      import org.apache.spark.sql.types.{LongType => SLong, TimestampNTZType}
-      df.schema("ts").dataType match {
-        case SLong =>
-          df.withColumn("ts",
-            org.apache.spark.sql.functions.timestamp_micros(
-              org.apache.spark.sql.functions.expr("ts div 1000")))
-        case TimestampNTZType =>
-          df.withColumn("ts", col("ts").cast("timestamp"))
-        case _ => df // already TimestampType
-      }
-    } else df
+    if (name == "events" &&
+        df.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
+      df.withColumn("ts", col("ts").cast("timestamp"))
+    else df
   }
 }
 

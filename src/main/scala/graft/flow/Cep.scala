@@ -29,23 +29,21 @@ package graft.flow
 object Cep {
   private val Name = "[a-z][a-z0-9_]*"
 
-  /** COUNT-mode parse: a quantifier-free pattern as its step atoms —
-    * `Some(alternatives)` per literal step, `None` for the `.` wildcard.
-    * Occurrence counting uses POSITION semantics over the token array
-    * (every start index whose k-token window matches — well-defined,
-    * overlap-friendly, and identical in any engine) because regex-based
-    * counting cannot be made boundary-exact without lookbehind, which
-    * RE2 (the oracle engine) does not support. Quantified steps make a
-    * count ambiguous, so they are rejected loudly. */
-  def literalSteps(pattern: String): Seq[Option[Seq[String]]] = {
+  /** The ONE step parser behind [[compile]], [[literalSteps]] and
+    * [[expandedSteps]]: each `>`-separated step as its atom —
+    * `Some(alternatives)` per literal step, `None` for the `.` wildcard —
+    * and its quantifier (`*`, `+`, `?`), if any. Every malformed pattern
+    * fails here with an IllegalArgumentException. */
+  private def parse(pattern: String): Seq[(Option[Seq[String]], Option[Char])] = {
     require(pattern.nonEmpty, "cep: empty pattern")
     val steps = pattern.split(">", -1).toSeq
     require(steps.forall(_.nonEmpty),
       s"cep: empty step in '$pattern' (doubled or trailing '>')")
     steps.map { s0 =>
-      require(!Set('*', '+', '?').contains(s0.last),
-        s"cep: count mode requires a quantifier-free pattern, got '$s0' in '$pattern'")
-      atom(s0, pattern)
+      val quant = Some(s0.last).filter(Set('*', '+', '?'))
+      val body = if (quant.isDefined) s0.init else s0
+      require(body.nonEmpty, s"cep: bare quantifier '$s0' in '$pattern'")
+      (atom(body, pattern), quant)
     }
   }
 
@@ -60,6 +58,20 @@ object Cep {
       require(body.matches(Name),
         s"cep: bad token '$body' in '$pattern' (want $Name | (a|b) | .)")
       Some(Seq(body))
+    }
+
+  /** COUNT-mode parse: a quantifier-free pattern as its step atoms.
+    * Occurrence counting uses POSITION semantics over the token array
+    * (every start index whose k-token window matches — well-defined,
+    * overlap-friendly, and identical in any engine) because regex-based
+    * counting cannot be made boundary-exact without lookbehind, which
+    * RE2 (the oracle engine) does not support. Quantified steps make a
+    * count ambiguous, so they are rejected loudly. */
+  def literalSteps(pattern: String): Seq[Option[Seq[String]]] =
+    parse(pattern).map { case (a, quant) =>
+      require(quant.isEmpty,
+        s"cep: count mode requires a quantifier-free pattern, got '$pattern'")
+      a
     }
 
   /** COUNT-mode parse WITH bounded quantifiers (round-12; the r11
@@ -81,22 +93,15 @@ object Cep {
     * is rejected — an empty match is meaningless for position counts. */
   def expandedSteps(pattern: String,
       maxRep: Int = 2): Seq[Seq[Option[Seq[String]]]] = {
-    require(pattern.nonEmpty, "cep: empty pattern")
     require(maxRep >= 1, s"cep: max_rep must be >= 1, got $maxRep")
-    val steps = pattern.split(">", -1).toSeq
-    require(steps.forall(_.nonEmpty),
-      s"cep: empty step in '$pattern' (doubled or trailing '>')")
-    val perStep: Seq[(Option[Seq[String]], Seq[Int])] = steps.map { s0 =>
-      val (body, reps) =
-        if (s0.endsWith("*")) (s0.init, 0 to maxRep)
-        else if (s0.endsWith("+")) (s0.init, 1 to maxRep)
-        else if (s0.endsWith("?")) (s0.init, 0 to 1)
-        else (s0, 1 to 1)
-      require(body.nonEmpty, s"cep: bare quantifier '$s0' in '$pattern'")
-      (atom(body, pattern), reps)
-    }
-    val expansions = perStep.foldLeft(Seq(Seq.empty[Option[Seq[String]]])) {
-      case (acc, (a, reps)) =>
+    val expansions = parse(pattern).foldLeft(Seq(Seq.empty[Option[Seq[String]]])) {
+      case (acc, (a, quant)) =>
+        val reps = quant match {
+          case Some('*') => 0 to maxRep
+          case Some('+') => 1 to maxRep
+          case Some('?') => 0 to 1
+          case _         => 1 to 1
+        }
         for { pre <- acc; r <- reps } yield pre ++ Seq.fill(r)(a)
     }.distinct
     require(expansions.size <= 64,
@@ -127,29 +132,10 @@ object Cep {
     perms
   }
 
-  def compile(pattern: String): String = {
-    require(pattern.nonEmpty, "cep: empty pattern")
-    val steps = pattern.split(">", -1).toSeq
-    require(steps.forall(_.nonEmpty),
-      s"cep: empty step in '$pattern' (doubled or trailing '>')")
-    val compiled = steps.map { s0 =>
-      val (body, quant) =
-        if (Set('*', '+', '?').contains(s0.last)) (s0.init, s0.last.toString)
-        else (s0, "")
-      val atom =
-        if (body == ".") "[^>]+"
-        else if (body.startsWith("(") && body.endsWith(")")) {
-          val alts = body.substring(1, body.length - 1).split("[|]", -1).toSeq
-          require(alts.nonEmpty && alts.forall(_.matches(Name)),
-            s"cep: bad alternation '$body' in '$pattern'")
-          alts.mkString("|")
-        } else {
-          require(body.matches(Name),
-            s"cep: bad token '$body' in '$pattern' (want ${Name} | (a|b) | .)")
-          body
-        }
-      s"(?:(?:$atom)>)$quant"
-    }
-    "(?:^|>)" + compiled.mkString
-  }
+  /** MATCH-mode compile: the whole grammar (quantifiers included) as the
+    * one regex described above. */
+  def compile(pattern: String): String =
+    "(?:^|>)" + parse(pattern).map { case (a, quant) =>
+      s"(?:(?:${a.map(_.mkString("|")).getOrElse("[^>]+")})>)${quant.fold("")(_.toString)}"
+    }.mkString
 }

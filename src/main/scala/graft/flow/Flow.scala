@@ -355,35 +355,12 @@ object Flow {
             val minK = exps.map(_.length).min
             // toks drops empty strings (the trailing-separator artifact)
             val toks = s"filter(split(${str(st, "field")}, '>'), x -> x != '')"
-            // WITHIN time bound (round-12) — the MATCH_RECOGNIZE / CEP
-            // "A then B within W" clause: an occurrence only counts when
-            // the span from its first to its last matched step fits the
-            // window (per expansion, its OWN last step). Needs `epochs`,
-            // an array<long> of µs timestamps ALIGNED with the token
-            // sequence (built from the same sorted collect); integer µs
-            // on both engines — no float enters the compare.
-            def expCond(steps: Seq[Option[Seq[String]]]): String = {
-              val k = steps.length
-              val conds = steps.zipWithIndex.collect {
-                case (Some(alts), j) =>
-                  val in = alts.map(a => s"'$a'").mkString("(", ", ", ")")
-                  s"element_at($toks, i + $j) IN $in"
-              }
-              val withinCond = intOpt(st, "within_s").map { w =>
-                val eps = strOpt(st, "epochs").getOrElse(sys.error(
-                  "flow: cep within_s needs 'epochs' (aligned array<long> µs column)"))
-                s"element_at($eps, i + ${k - 1}) - element_at($eps, i) <= " +
-                  s"${w.toLong * 1000000L}L"
-              }
-              val inner = (conds ++ withinCond) match {
-                case Nil => "true"
-                case cs  => cs.mkString(" AND ")
-              }
-              if (k == minK) s"($inner)"
-              else s"(CASE WHEN i + ${k - 1} <= size($toks) " +
+            val cond = exps.map { steps =>
+              val inner = stepCond(st, "cep", toks, steps)
+              if (steps.length == minK) s"($inner)"
+              else s"(CASE WHEN i + ${steps.length - 1} <= size($toks) " +
                 s"THEN $inner ELSE false END)"
-            }
-            val cond = exps.map(expCond).mkString(" OR ")
+            }.mkString(" OR ")
             val starts = s"filter(sequence(1, size($toks) - ${minK - 1}), " +
               s"i -> $cond)"
             // AFTER MATCH SKIP semantics (round-12): default counts every
@@ -455,21 +432,7 @@ object Flow {
         val steps = Cep.literalSteps(str(st, "pattern"))
         val k = steps.length
         val toks = str(st, "toks")
-        val conds = steps.zipWithIndex.collect {
-          case (Some(alts), j) =>
-            val in = alts.map(a => s"'$a'").mkString("(", ", ", ")")
-            s"element_at($toks, i + $j) IN $in"
-        }
-        val withinCond = intOpt(st, "within_s").map { w =>
-          val eps = strOpt(st, "epochs").getOrElse(sys.error(
-            "flow: cep_spans within_s needs 'epochs' (aligned array<long> µs column)"))
-          s"element_at($eps, i + ${k - 1}) - element_at($eps, i) <= " +
-            s"${w.toLong * 1000000L}L"
-        }
-        val cond = (conds ++ withinCond) match {
-          case Nil => "true"
-          case cs  => cs.mkString(" AND ")
-        }
+        val cond = stepCond(st, "cep_spans", toks, steps)
         df.withColumn(str(st, "as"), explode(expr(
           s"CASE WHEN size($toks) >= $k THEN " +
             s"filter(sequence(1, size($toks) - ${k - 1}), i -> $cond) " +
@@ -505,6 +468,35 @@ object Flow {
         sys.error("flow: 'clone' is only valid as the final step of a " +
           "cloning flow — compile it with Flow.clones, not Flow.compile")
       case other      => sys.error(s"flow: unknown op '$other'")
+    }
+  }
+
+  /** The window test shared by `cep` count mode and `cep_spans`: the
+    * token array `toks` holds `steps` at start position `i` (Spark SQL
+    * text over the HOF's `i`). WITHIN time bound (round-12) — the
+    * MATCH_RECOGNIZE / CEP "A then B within W" clause: with `within_s`
+    * an occurrence only counts when the span from its first to its last
+    * matched step fits the window. Needs `epochs`, an array<long> of µs
+    * timestamps ALIGNED with the token sequence (built from the same
+    * sorted collect); integer µs on both engines — no float enters the
+    * compare. */
+  private def stepCond(st: JValue, op: String, toks: String,
+      steps: Seq[Option[Seq[String]]]): String = {
+    val k = steps.length
+    val conds = steps.zipWithIndex.collect {
+      case (Some(alts), j) =>
+        val in = alts.map(a => s"'$a'").mkString("(", ", ", ")")
+        s"element_at($toks, i + $j) IN $in"
+    }
+    val withinCond = intOpt(st, "within_s").map { w =>
+      val eps = strOpt(st, "epochs").getOrElse(sys.error(
+        s"flow: $op within_s needs 'epochs' (aligned array<long> µs column)"))
+      s"element_at($eps, i + ${k - 1}) - element_at($eps, i) <= " +
+        s"${w.toLong * 1000000L}L"
+    }
+    (conds ++ withinCond) match {
+      case Nil => "true"
+      case cs  => cs.mkString(" AND ")
     }
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.{Q, T}
 import graft.operators.PinSyntax._
 import graft.Dsl._
@@ -127,6 +127,98 @@ object EventOps {
       .select(col("user_id"), col("recency_us"), col("freq"), col("monetary"))
   }
 
+  /** x, n rows earlier in the user's (ts, event_id) order. */
+  private def lagOf(c: Column, n: Int): Column =
+    if (n == 0) c else lag(c, n).over(arrivalW)
+
+  /** Exact µs from the event k−1 rows back to this one. */
+  private def spanUs(k: Int): Column =
+    unix_micros(col("ts")) - unix_micros(lagOf(col("ts"), k - 1))
+
+  /** The hit column of every stream_pattern_* twin: ANY expansion's
+    * k-event window ENDING at this row matches — and, when bounded, spans
+    * at most withinUs — exactly the fold StreamOps.patternStep runs.
+    * NULL lags from short histories AND/OR to a dropped row. */
+  private def patternHit(exps: Seq[Seq[Option[Seq[String]]]],
+      withinUs: Long = Long.MaxValue): Column =
+    exps.map { steps =>
+      val k = steps.length
+      val types = steps.zipWithIndex.map { case (atoms, j) =>
+        val c = lagOf(col("event_type"), k - 1 - j)
+        atoms.map(alts => c.isin(alts: _*)).getOrElse(c.isNotNull)
+      }.reduce(_ && _)
+      if (withinUs == Long.MaxValue) types else types && spanUs(k) <= withinUs
+    }.reduce(_ || _)
+
+  private def patternHits(s: SparkSession, d: String,
+      exps: Seq[Seq[Option[Seq[String]]]],
+      withinUs: Long = Long.MaxValue): DataFrame =
+    T(s, d, "events")
+      .withColumn("hit", patternHit(exps, withinUs))
+      .filter(col("hit"))
+      .select(col("user_id"), col("event_id"))
+      .orderBy(col("user_id"), col("event_id"))
+
+  private val alertSteps =
+    graft.flow.Cep.literalSteps(graft.streaming.StreamOps.PatternAlert)
+  private val quantifiedExps = graft.flow.Cep.expandedSteps(
+    graft.streaming.StreamOps.PatternQuantified,
+    graft.streaming.StreamOps.PatternMaxRep)
+  private val permuteExps =
+    graft.flow.Cep.permuteSteps(graft.streaming.StreamOps.PatternPermute)
+
+  private val patternW =
+    "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) t "
+
+  /** DuckDB twin of one expansion's type test in [[patternHit]]; `ref(n)`
+    * names the column holding event_type n rows back. */
+  private def stepsSql(steps: Seq[Option[Seq[String]]],
+      ref: Int => String): String = {
+    val k = steps.length
+    steps.zipWithIndex.map { case (atoms, j) =>
+      val r = if (j == k - 1) "event_type" else ref(k - 1 - j)
+      atoms.map(a => s"$r IN (${a.map(x => s"'$x'").mkString(", ")})")
+        .getOrElse(s"$r IS NOT NULL")
+    }.mkString(" AND ")
+  }
+
+  private val alertSpanSql =
+    s"epoch_us(ts) - epoch_us(lag(ts, ${alertSteps.length - 1}) OVER w) AS span_us"
+
+  /** Oracle of a single-expansion twin: lag columns `s0..s(k−2)` plus
+    * `extra` columns, filtered by the type test and `where`. */
+  private def literalSql(steps: Seq[Option[Seq[String]]], out: String,
+      extra: Seq[String], where: String, orderBy: String): String = {
+    val k = steps.length
+    val lags = (0 until k - 1).map(j => s"lag(event_type, ${k - 1 - j}) OVER w AS s$j")
+    usEvents(s"SELECT $out FROM (" +
+      s"SELECT user_id, event_id, event_type, ${(lags ++ extra).mkString(", ")} " +
+      "FROM events " + patternW +
+      s"WHERE ${stepsSql(steps, n => s"s${k - 1 - n}")}$where " +
+      s"ORDER BY user_id, $orderBy")
+  }
+
+  /** Oracle of an any-expansion twin: one `l<n>` lag column per distance
+    * serves every expansion; a bounded one adds `sp<n>` spans (sp0 rides
+    * along so a length-1 expansion's `sp0 <= within` stays total). */
+  private def anySql(exps: Seq[Seq[Option[Seq[String]]]],
+      withinUs: Long = Long.MaxValue): String = {
+    val maxLag = exps.map(_.length).max - 1
+    val lags = (1 to maxLag).map(n => s"lag(event_type, $n) OVER w AS l$n")
+    val cols =
+      if (withinUs == Long.MaxValue) lags
+      else Seq("ts", "0 AS sp0") ++ lags ++ (1 to maxLag)
+        .map(n => s"epoch_us(ts) - epoch_us(lag(ts, $n) OVER w) AS sp$n")
+    val ors = exps.map { steps =>
+      val types = stepsSql(steps, n => s"l$n")
+      if (withinUs == Long.MaxValue) s"($types)"
+      else s"($types AND sp${steps.length - 1} <= $withinUs)"
+    }.mkString(" OR ")
+    usEvents("SELECT user_id, event_id FROM (" +
+      s"SELECT user_id, event_id, event_type, ${cols.mkString(", ")} FROM events " +
+      patternW + s"WHERE $ors ORDER BY user_id, event_id")
+  }
+
   val defs: Seq[(String, Q)] = Seq(
 
     // ---- §2.I composites ---------------------------------------------
@@ -213,321 +305,72 @@ object EventOps {
         "WHERE event_type = 'error' AND p1 = 'error' AND p2 = 'error' " +
         "AND g1 <= 86400000000 AND g2 <= 86400000000 ORDER BY user_id, event_id")),
 
-    // Batch twin of StreamOps.patternAlertTws — streaming CEP: the
-    // configurable contiguous sequence pattern (the SAME Cep grammar
-    // string, StreamOps.PatternAlert, compiled once by Cep.literalSteps
-    // for twin, machine, and oracle) matched over each user's
-    // (ts, event_id)-ordered stream; one lag window per pattern step,
-    // alert = the completing event. StreamingSpec pins the
-    // transformWithState machine (constant k−1-type state per user) to
-    // exactly these rows, including across micro-batch seams.
+    // The six stream_pattern_* keys are the batch twins of StreamOps'
+    // CEP machine: each shared Cep grammar string (StreamOps.Pattern*)
+    // compiles once for twin, machine, and oracle, and is matched over
+    // each user's (ts, event_id)-ordered stream with one lag window per
+    // distance (patternHit); the hit is the completing event. StreamingSpec
+    // pins the transformWithState machine to exactly these rows across
+    // micro-batch seams.
     "stream_pattern_alert" -> Q(
-      (s, d) => {
-        val steps = graft.flow.Cep.literalSteps(
-          graft.streaming.StreamOps.PatternAlert)
-        val k = steps.length
-        val conds = steps.zipWithIndex.map { case (atoms, j) =>
-          val c = if (j == k - 1) col("event_type")
-            else lag(col("event_type"), k - 1 - j).over(arrivalW)
-          atoms.map(alts => c.isin(alts: _*)).getOrElse(c.isNotNull)
-        }
-        T(s, d, "events")
-          .withColumn("hit", conds.reduce(_ && _))
-          .filter(col("hit"))
-          .select(col("user_id"), col("event_id"))
-          .orderBy(col("user_id"), col("event_id"))
-      },
-      {
-        val steps = graft.flow.Cep.literalSteps(
-          graft.streaming.StreamOps.PatternAlert)
-        val k = steps.length
-        val lags = (0 until k - 1)
-          .map(j => s"lag(event_type, ${k - 1 - j}) OVER w AS s$j")
-          .mkString(", ")
-        val conds = steps.zipWithIndex.map { case (atoms, j) =>
-          val ref = if (j == k - 1) "event_type" else s"s$j"
-          atoms.map(a => s"$ref IN (${a.map(x => s"'$x'").mkString(", ")})")
-            .getOrElse(s"$ref IS NOT NULL")
-        }.mkString(" AND ")
-        usEvents("SELECT user_id, event_id FROM (" +
-          s"SELECT user_id, event_id, event_type, $lags FROM events " +
-          "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) t " +
-          s"WHERE $conds ORDER BY user_id, event_id")
-      }),
+      (s, d) => patternHits(s, d, Seq(alertSteps)),
+      literalSql(alertSteps, "user_id, event_id", Nil, "", "event_id")),
 
-    // Batch twin of StreamOps.patternWithinTws (round-12) — streaming CEP
-    // with the WITHIN bound: same configurable pattern as
-    // stream_pattern_alert (the shared Cep grammar string), but a hit
-    // only fires when the span from the pattern's first to last event
-    // fits StreamOps.PatternWithinUs (24 h). In the lag-window
-    // formulation the span is ONE extra lag over ts — integer µs both
-    // engines. StreamingSpec pins the transformWithState machine (k−1
-    // types + k−1 timestamps per user — still constant state) to exactly
-    // these rows across micro-batch seams, including a seam where the
-    // bound bites.
+    // WITHIN bound (round-12): a hit only fires when the span from the
+    // pattern's first to last event fits StreamOps.PatternWithinUs (24 h)
+    // — ONE extra lag over ts, integer µs in both engines.
     "stream_pattern_within" -> Q(
-      (s, d) => {
-        val steps = graft.flow.Cep.literalSteps(
-          graft.streaming.StreamOps.PatternAlert)
-        val k = steps.length
-        val conds = steps.zipWithIndex.map { case (atoms, j) =>
-          val c = if (j == k - 1) col("event_type")
-            else lag(col("event_type"), k - 1 - j).over(arrivalW)
-          atoms.map(alts => c.isin(alts: _*)).getOrElse(c.isNotNull)
-        }
-        val span = unix_micros(col("ts")) -
-          unix_micros(lag(col("ts"), k - 1).over(arrivalW))
-        T(s, d, "events")
-          .withColumn("hit", conds.reduce(_ && _) &&
-            span <= graft.streaming.StreamOps.PatternWithinUs)
-          .filter(col("hit"))
-          .select(col("user_id"), col("event_id"))
-          .orderBy(col("user_id"), col("event_id"))
-      },
-      {
-        val steps = graft.flow.Cep.literalSteps(
-          graft.streaming.StreamOps.PatternAlert)
-        val k = steps.length
-        val lags = (0 until k - 1)
-          .map(j => s"lag(event_type, ${k - 1 - j}) OVER w AS s$j")
-          .mkString(", ")
-        val conds = steps.zipWithIndex.map { case (atoms, j) =>
-          val ref = if (j == k - 1) "event_type" else s"s$j"
-          atoms.map(a => s"$ref IN (${a.map(x => s"'$x'").mkString(", ")})")
-            .getOrElse(s"$ref IS NOT NULL")
-        }.mkString(" AND ")
-        usEvents("SELECT user_id, event_id FROM (" +
-          s"SELECT user_id, event_id, event_type, $lags, " +
-          s"epoch_us(ts) - epoch_us(lag(ts, ${k - 1}) OVER w) AS span_us " +
-          "FROM events " +
-          "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) t " +
-          s"WHERE $conds AND span_us <= " +
-          s"${graft.streaming.StreamOps.PatternWithinUs} " +
-          "ORDER BY user_id, event_id")
-      }),
+      (s, d) => patternHits(s, d, Seq(alertSteps),
+        graft.streaming.StreamOps.PatternWithinUs),
+      literalSql(alertSteps, "user_id, event_id", Seq(alertSpanSql),
+        s" AND span_us <= ${graft.streaming.StreamOps.PatternWithinUs}",
+        "event_id")),
 
-    // Batch twin of StreamOps.patternSpanTws (round-12) — streaming CEP
-    // with MEASURES emission: every hit of the shared PatternAlert
-    // grammar reports WHICH events matched (first/last event id, exact µs
-    // span — the payload a notification sink routes), not just the
-    // completing event. In the lag-window formulation the measures are
-    // two extra lags (event_id and ts at distance k−1); conditions are
-    // identical to stream_pattern_alert, so every alert row here pairs
-    // 1:1 with a hit there. StreamingSpec pins the transformWithState
-    // machine (k−1 (type,id,ts) triples per user — constant state) to
-    // exactly these rows across micro-batch seams.
+    // MEASURES emission (round-12): every hit of the alert pattern reports
+    // WHICH events matched (first/last event id, exact µs span — the
+    // payload a notification sink routes); two extra lags at distance k−1,
+    // so every row here pairs 1:1 with a stream_pattern_alert hit.
     "stream_pattern_measures" -> Q(
       (s, d) => {
-        val steps = graft.flow.Cep.literalSteps(
-          graft.streaming.StreamOps.PatternAlert)
-        val k = steps.length
-        val conds = steps.zipWithIndex.map { case (atoms, j) =>
-          val c = if (j == k - 1) col("event_type")
-            else lag(col("event_type"), k - 1 - j).over(arrivalW)
-          atoms.map(alts => c.isin(alts: _*)).getOrElse(c.isNotNull)
-        }
+        val k = alertSteps.length
         T(s, d, "events")
-          .withColumn("hit", conds.reduce(_ && _))
-          .withColumn("first_event_id", lag(col("event_id"), k - 1).over(arrivalW))
-          .withColumn("span_us", unix_micros(col("ts")) -
-            unix_micros(lag(col("ts"), k - 1).over(arrivalW)))
+          .withColumn("hit", patternHit(Seq(alertSteps)))
+          .withColumn("first_event_id", lagOf(col("event_id"), k - 1))
+          .withColumn("span_us", spanUs(k))
           .filter(col("hit"))
           .select(col("user_id"), col("first_event_id"),
             col("event_id").as("last_event_id"), col("span_us"))
           .orderBy(col("user_id"), col("last_event_id"))
       },
-      {
-        val steps = graft.flow.Cep.literalSteps(
-          graft.streaming.StreamOps.PatternAlert)
-        val k = steps.length
-        val lags = (0 until k - 1)
-          .map(j => s"lag(event_type, ${k - 1 - j}) OVER w AS s$j")
-          .mkString(", ")
-        val conds = steps.zipWithIndex.map { case (atoms, j) =>
-          val ref = if (j == k - 1) "event_type" else s"s$j"
-          atoms.map(a => s"$ref IN (${a.map(x => s"'$x'").mkString(", ")})")
-            .getOrElse(s"$ref IS NOT NULL")
-        }.mkString(" AND ")
-        usEvents("SELECT user_id, first_event_id, event_id AS last_event_id, " +
-          "span_us FROM (" +
-          s"SELECT user_id, event_id, event_type, $lags, " +
-          s"lag(event_id, ${k - 1}) OVER w AS first_event_id, " +
-          s"epoch_us(ts) - epoch_us(lag(ts, ${k - 1}) OVER w) AS span_us " +
-          "FROM events " +
-          "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) t " +
-          s"WHERE $conds ORDER BY user_id, last_event_id")
-      }),
+      literalSql(alertSteps,
+        "user_id, first_event_id, event_id AS last_event_id, span_us",
+        Seq(s"lag(event_id, ${alertSteps.length - 1}) OVER w AS first_event_id",
+          alertSpanSql), "", "last_event_id")),
 
-    // Batch twin of StreamOps.patternQuantifiedTws (round-12) — streaming
-    // CEP over a QUANTIFIED pattern: the shared grammar string expands
-    // once (Cep.expandedSteps, the bounded-expansion discipline the flow
-    // count mode uses) and an event is a hit when ANY expansion's
-    // lag-window ending at it matches — existential, one hit per
-    // completing event even when several expansion lengths match; runs
-    // longer than the bound are not hits (the documented truncation).
-    // One lag column per distance serves every expansion; NULL lags from
-    // short histories AND/OR to false identically in both engines.
-    // StreamingSpec pins the transformWithState machine (last maxK−1
-    // types per user — constant state, |expansions| suffix checks per
-    // event) to exactly these rows across micro-batch seams.
+    // QUANTIFIED pattern (round-12): the grammar string expands once
+    // (Cep.expandedSteps, the flow count mode's bounded expansion) and an
+    // event is a hit when ANY expansion's window ending at it matches —
+    // one hit per completing event; runs longer than the bound are not
+    // hits (the documented truncation).
     "stream_pattern_quantified" -> Q(
-      (s, d) => {
-        val exps = graft.flow.Cep.expandedSteps(
-          graft.streaming.StreamOps.PatternQuantified,
-          graft.streaming.StreamOps.PatternMaxRep)
-        def condOf(steps: Seq[Option[Seq[String]]]) = {
-          val k = steps.length
-          steps.zipWithIndex.map { case (atoms, j) =>
-            val lagN = k - 1 - j
-            val c = if (lagN == 0) col("event_type")
-              else lag(col("event_type"), lagN).over(arrivalW)
-            atoms.map(alts => c.isin(alts: _*)).getOrElse(c.isNotNull)
-          }.reduce(_ && _)
-        }
-        T(s, d, "events")
-          .withColumn("hit", exps.map(condOf).reduce(_ || _))
-          .filter(col("hit"))
-          .select(col("user_id"), col("event_id"))
-          .orderBy(col("user_id"), col("event_id"))
-      },
-      {
-        val exps = graft.flow.Cep.expandedSteps(
-          graft.streaming.StreamOps.PatternQuantified,
-          graft.streaming.StreamOps.PatternMaxRep)
-        val maxLag = exps.map(_.length).max - 1
-        val lags = (1 to maxLag)
-          .map(n => s"lag(event_type, $n) OVER w AS l$n").mkString(", ")
-        val ors = exps.map { steps =>
-          val k = steps.length
-          steps.zipWithIndex.map { case (atoms, j) =>
-            val lagN = k - 1 - j
-            val ref = if (lagN == 0) "event_type" else s"l$lagN"
-            atoms.map(a => s"$ref IN (${a.map(x => s"'$x'").mkString(", ")})")
-              .getOrElse(s"$ref IS NOT NULL")
-          }.mkString(" AND ")
-        }.map(c => s"($c)").mkString(" OR ")
-        usEvents("SELECT user_id, event_id FROM (" +
-          s"SELECT user_id, event_id, event_type, $lags FROM events " +
-          "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) t " +
-          s"WHERE $ors ORDER BY user_id, event_id")
-      }),
+      (s, d) => patternHits(s, d, quantifiedExps),
+      anySql(quantifiedExps)),
 
-    // Batch twin of StreamOps.patternQuantifiedWithinTws (r13) — the
-    // COMPOSED machine: bounded-expansion quantifiers AND the WITHIN
-    // bound in one hit condition, because the single-feature twins can
-    // both be green while the composition is wrong (a machine that
-    // restores types but not timestamps, or applies the bound only to
-    // the longest expansion). In the lag-window formulation each
-    // expansion of length k contributes (type conds) AND
-    // (ts − lag(ts, k−1)) ≤ withinUs — the span measured per CANDIDATE
-    // LENGTH, exact integer µs in both engines; the event hits when ANY
-    // bounded expansion ending at it matches. StreamPipelineSpec drives
-    // the stateful twin through a kill/restart where a match straddles
-    // the seam and the bound must bite on restored timestamps.
+    // The COMPOSED quantifiers + WITHIN condition (r13): each expansion of
+    // length k needs its types AND ts − lag(ts, k−1) ≤ withinUs — the span
+    // per CANDIDATE LENGTH. StreamPipelineSpec drives the machine through
+    // a kill/restart where the bound must bite on restored timestamps.
     "stream_pattern_quantified_within" -> Q(
-      (s, d) => {
-        val exps = graft.flow.Cep.expandedSteps(
-          graft.streaming.StreamOps.PatternQuantified,
-          graft.streaming.StreamOps.PatternMaxRep)
-        val withinUs = graft.streaming.StreamOps.PatternWithinUs
-        def condOf(steps: Seq[Option[Seq[String]]]) = {
-          val k = steps.length
-          val types = steps.zipWithIndex.map { case (atoms, j) =>
-            val lagN = k - 1 - j
-            val c = if (lagN == 0) col("event_type")
-              else lag(col("event_type"), lagN).over(arrivalW)
-            atoms.map(alts => c.isin(alts: _*)).getOrElse(c.isNotNull)
-          }.reduce(_ && _)
-          val span = unix_micros(col("ts")) -
-            unix_micros(lag(col("ts"), k - 1).over(arrivalW))
-          types && span <= withinUs
-        }
-        T(s, d, "events")
-          .withColumn("hit", exps.map(condOf).reduce(_ || _))
-          .filter(col("hit"))
-          .select(col("user_id"), col("event_id"))
-          .orderBy(col("user_id"), col("event_id"))
-      },
-      {
-        val exps = graft.flow.Cep.expandedSteps(
-          graft.streaming.StreamOps.PatternQuantified,
-          graft.streaming.StreamOps.PatternMaxRep)
-        val withinUs = graft.streaming.StreamOps.PatternWithinUs
-        val maxLag = exps.map(_.length).max - 1
-        // sp0 rides along so the builder stays total over Cep.expandedSteps:
-        // a length-1 expansion's span predicate is `sp0 <= within` — the
-        // Spark twin's lag(ts, 0) span, which is always 0 (r14 advice; the
-        // current fixed pattern never emits k=1, but the builder must not
-        // reference a nonexistent alias if one ever does).
-        val lags = (Seq("0 AS sp0") ++ (1 to maxLag)
-          .map(n => s"lag(event_type, $n) OVER w AS l$n") ++
-          (1 to maxLag)
-            .map(n => s"epoch_us(ts) - epoch_us(lag(ts, $n) OVER w) AS sp$n"))
-          .mkString(", ")
-        val ors = exps.map { steps =>
-          val k = steps.length
-          val types = steps.zipWithIndex.map { case (atoms, j) =>
-            val lagN = k - 1 - j
-            val ref = if (lagN == 0) "event_type" else s"l$lagN"
-            atoms.map(a => s"$ref IN (${a.map(x => s"'$x'").mkString(", ")})")
-              .getOrElse(s"$ref IS NOT NULL")
-          }.mkString(" AND ")
-          s"($types AND sp${k - 1} <= $withinUs)"
-        }.mkString(" OR ")
-        usEvents("SELECT user_id, event_id FROM (" +
-          s"SELECT user_id, event_id, event_type, ts, $lags FROM events " +
-          "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) t " +
-          s"WHERE $ors ORDER BY user_id, event_id")
-      }),
+      (s, d) => patternHits(s, d, quantifiedExps,
+        graft.streaming.StreamOps.PatternWithinUs),
+      anySql(quantifiedExps, graft.streaming.StreamOps.PatternWithinUs)),
 
-    // Batch twin of StreamOps.patternPermuteTws (round-12) — streaming
-    // PERMUTE: the shared pattern's k! orderings (Cep.permuteSteps, the
-    // same list the flow op's "permute" flag compiles) OR over one set of
-    // lag columns; an event is a hit when the k-window ENDING at it holds
-    // the steps in ANY order. All orderings share one window length, so
-    // the twin is the quantified twin with a different expansion source.
-    // StreamingSpec pins the transformWithState machine (the same
-    // PatternAnyProcessor, fed permutations) to exactly these rows
-    // across micro-batch seams.
+    // PERMUTE (round-12): the k! orderings (Cep.permuteSteps, the list the
+    // flow op's "permute" flag compiles) — the quantified twin with a
+    // different expansion source.
     "stream_pattern_permute" -> Q(
-      (s, d) => {
-        val exps = graft.flow.Cep.permuteSteps(
-          graft.streaming.StreamOps.PatternPermute)
-        def condOf(steps: Seq[Option[Seq[String]]]) = {
-          val k = steps.length
-          steps.zipWithIndex.map { case (atoms, j) =>
-            val lagN = k - 1 - j
-            val c = if (lagN == 0) col("event_type")
-              else lag(col("event_type"), lagN).over(arrivalW)
-            atoms.map(alts => c.isin(alts: _*)).getOrElse(c.isNotNull)
-          }.reduce(_ && _)
-        }
-        T(s, d, "events")
-          .withColumn("hit", exps.map(condOf).reduce(_ || _))
-          .filter(col("hit"))
-          .select(col("user_id"), col("event_id"))
-          .orderBy(col("user_id"), col("event_id"))
-      },
-      {
-        val exps = graft.flow.Cep.permuteSteps(
-          graft.streaming.StreamOps.PatternPermute)
-        val maxLag = exps.map(_.length).max - 1
-        val lags = (1 to maxLag)
-          .map(n => s"lag(event_type, $n) OVER w AS l$n").mkString(", ")
-        val ors = exps.map { steps =>
-          val k = steps.length
-          steps.zipWithIndex.map { case (atoms, j) =>
-            val lagN = k - 1 - j
-            val ref = if (lagN == 0) "event_type" else s"l$lagN"
-            atoms.map(a => s"$ref IN (${a.map(x => s"'$x'").mkString(", ")})")
-              .getOrElse(s"$ref IS NOT NULL")
-          }.mkString(" AND ")
-        }.map(c => s"($c)").mkString(" OR ")
-        usEvents("SELECT user_id, event_id FROM (" +
-          s"SELECT user_id, event_id, event_type, $lags FROM events " +
-          "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) t " +
-          s"WHERE $ors ORDER BY user_id, event_id")
-      }),
+      (s, d) => patternHits(s, d, permuteExps),
+      anySql(permuteExps)),
 
     // Batch twin of StreamOps.attributionTws (the per-purchase frame under
     // evt_attribution's channel rollup): one trailing-frame window carries

@@ -154,25 +154,6 @@ object Scale {
     * would never fire), nor for the streaming resident index (pinned ONCE
     * outside foreachBatch by design; the soak counts those pins). */
   def pin(df: DataFrame, eager: Boolean): DataFrame = {
-    // optimization-round diagnostics: per-pin wall time to stderr
-    if (df.sparkSession.conf.getOption("spark.graft.pin.timing")
-        .contains("true")) {
-      def ms[A](f: => A): (A, Long) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1000000)
-      }
-      val (_, tA) = ms(df.queryExecution.analyzed)
-      val (_, tO) = ms(df.queryExecution.optimizedPlan)
-      val (_, tP) = ms(df.queryExecution.executedPlan)
-      val (_, tR) = ms(df.queryExecution.toRdd)
-      val (r, tC) = ms(pinInner(df, eager))
-      System.err.println(s"[pin] eager=$eager analyze=${tA} optimize=${tO} " +
-        s"plan=${tP} rdd=${tR} checkpoint=${tC} ms")
-      return r
-    }
-    pinInner(df, eager)
-  }
-
-  private def pinInner(df: DataFrame, eager: Boolean): DataFrame = {
     recordForAudit(df)
     df.sparkSession.conf.getOption("spark.graft.pin.mode")
       .getOrElse("local") match {

@@ -152,69 +152,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("bucket"), col("n"))
 
-  /** The same consecutive-error machine on the Spark 4.x arbitrary-state
-    * API (`transformWithState` + `StatefulProcessor` + typed ValueState).
-    * Requires the RocksDB state store provider — the state backend a real
-    * deployment runs anyway (spillable, snapshot/changelog checkpointing).
-    * Semantics are identical to [[statefulAlert]]; StreamingSpec pins both
-    * to the batch twin. */
-  class AlertProcessor(threshold: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, Alert] {
-    @transient private var runState:
-      org.apache.spark.sql.streaming.ValueState[ErrorRun] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      runState = getHandle.getValueState[ErrorRun]("run",
-        org.apache.spark.sql.Encoders.product[ErrorRun],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Alert] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var (run, lastTs) = Option(runState.get())
-        .map(s => (s.count, s.lastTsMicros)).getOrElse((0, Long.MinValue))
-      val out = Seq.newBuilder[Alert]
-      sorted.foreach { e =>
-        val t = micros(e.ts)
-        if (lastTs != Long.MinValue && t - lastTs > GapResetMicros) run = 0
-        if (e.event_type == "error") {
-          run += 1
-          if (run >= threshold) out += Alert(e.user_id, e.event_id, run)
-        } else run = 0
-        lastTs = t
-      }
-      runState.update(ErrorRun(run, lastTs))
-      // GC timer (event-time ms): once the watermark passes lastTs + gap the
-      // run is dead by the gap rule, so removal is semantically free.
-      getHandle.registerTimer(lastTs / 1000L + GapResetMicros / 1000L)
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Alert] = {
-      // Stale timers from earlier batches fire too — only clear state when
-      // THIS timer is at/after the live run's expiry.
-      Option(runState.get()).foreach { s =>
-        if (expiredTimerInfo.getExpiryTimeInMs() >=
-            s.lastTsMicros / 1000L + GapResetMicros / 1000L) {
-          runState.clear()
-        }
-      }
-      Iterator.empty
-    }
-  }
-
-  def statefulAlertTws(events: Dataset[Event], threshold: Int = 3): Dataset[Alert] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(new AlertProcessor(threshold),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-  }
-
   /** One attributed conversion: purchase `event_id` credited to `channel`. */
   case class Attribution(user_id: Long, event_id: Long, channel: String,
       value: Double)
@@ -318,126 +255,9 @@ object StreamOps {
     * [[patternAlertTws]] compile the SAME Cep grammar string). */
   val PatternAlert: String = "view>(view|click)>purchase"
 
-  /** One CEP hit: the event that completes a contiguous pattern match. */
-  case class PatternHit(user_id: Long, event_id: Long)
-
-  private case class TypeTail(tail: Seq[String])
-
-  /** Streaming CEP (round-11) — the `cep` flow op's stateful sibling: a
-    * configurable quantifier-free sequence pattern (Cep.literalSteps
-    * grammar, alternations + wildcards) matched CONTIGUOUSLY over each
-    * user's event stream, emitting the completing event of every hit.
-    * Per-user state is exactly the last k−1 event types (k = pattern
-    * length) — CONSTANT-size state per key, the property that makes CEP
-    * viable on an unbounded stream; a production deployment would add a
-    * TTLConfig to GC long-idle users (k−1 strings each, so NONE here is
-    * deliberate, not an oversight). Events fold in deterministic
-    * (ts, event_id) order within each micro-batch — the statefulAlert
-    * ordering discipline — so emission ≡ the batch twin's lag-window
-    * formulation. */
-  class PatternProcessor(steps: Seq[Option[Seq[String]]])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, PatternHit] {
-    private val k = steps.length
-    @transient private var tailState:
-      org.apache.spark.sql.streaming.ValueState[TypeTail] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      tailState = getHandle.getValueState[TypeTail]("tail",
-        org.apache.spark.sql.Encoders.product[TypeTail],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[PatternHit] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var tail = Option(tailState.get()).map(_.tail).getOrElse(Seq.empty)
-      val out = Seq.newBuilder[PatternHit]
-      sorted.foreach { e =>
-        val win = (tail :+ e.event_type).takeRight(k)
-        if (win.size == k &&
-            steps.zip(win).forall { case (a, t) => a.forall(_.contains(t)) })
-          out += PatternHit(e.user_id, e.event_id)
-        tail = win.takeRight(k - 1)
-      }
-      tailState.update(TypeTail(tail))
-      out.result().iterator
-    }
-  }
-
-  def patternAlertTws(events: Dataset[Event],
-      pattern: String = PatternAlert): Dataset[PatternHit] = {
-    import events.sparkSession.implicits._
-    val steps = graft.flow.Cep.literalSteps(pattern)
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(new PatternProcessor(steps),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-  }
-
   /** The WITHIN bound shared by [[patternWithinTws]], its batch twin
     * (stream_pattern_within) and the oracle: 24 h in µs. */
   val PatternWithinUs: Long = 86400L * 1000000L
-
-  private case class TypeTimeTail(types: Seq[String], tss: Seq[Long])
-
-  /** Streaming CEP with a WITHIN time bound (round-12) — the stateful
-    * sibling of the flow cep op's `within_s`: the pattern only fires when
-    * the span from its first to its last matched event fits the window
-    * ("A then B then C within 24 h" — the reference-style signal
-    * correlation bound). State per user grows by exactly the k−1 event
-    * TIMESTAMPS next to the k−1 types — still constant-size per key; the
-    * bound check is one long subtraction at emission time, so the
-    * processor stays O(1) per event. Same deterministic in-batch
-    * (ts, event_id) fold as [[PatternProcessor]], so emission ≡ the batch
-    * twin's lag-window formulation across micro-batch seams. */
-  class PatternWithinProcessor(steps: Seq[Option[Seq[String]]], withinUs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, PatternHit] {
-    private val k = steps.length
-    @transient private var tailState:
-      org.apache.spark.sql.streaming.ValueState[TypeTimeTail] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      tailState = getHandle.getValueState[TypeTimeTail]("ttail",
-        org.apache.spark.sql.Encoders.product[TypeTimeTail],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[PatternHit] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var tail = Option(tailState.get())
-        .map(t => (t.types, t.tss)).getOrElse((Seq.empty[String], Seq.empty[Long]))
-      val out = Seq.newBuilder[PatternHit]
-      sorted.foreach { e =>
-        val types = (tail._1 :+ e.event_type).takeRight(k)
-        val tss = (tail._2 :+ micros(e.ts)).takeRight(k)
-        if (types.size == k &&
-            steps.zip(types).forall { case (a, t) => a.forall(_.contains(t)) } &&
-            tss.last - tss.head <= withinUs)
-          out += PatternHit(e.user_id, e.event_id)
-        tail = (types.takeRight(k - 1), tss.takeRight(k - 1))
-      }
-      tailState.update(TypeTimeTail(tail._1, tail._2))
-      out.result().iterator
-    }
-  }
-
-  def patternWithinTws(events: Dataset[Event],
-      pattern: String = PatternAlert,
-      withinUs: Long = PatternWithinUs): Dataset[PatternHit] = {
-    import events.sparkSession.implicits._
-    val steps = graft.flow.Cep.literalSteps(pattern)
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(new PatternWithinProcessor(steps, withinUs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-  }
 
   /** The shared QUANTIFIED pattern (stream_pattern_quantified's batch
     * twin and [[patternQuantifiedTws]] expand the SAME grammar string at
@@ -445,219 +265,148 @@ object StreamOps {
   val PatternQuantified: String = "view>click*>purchase"
   val PatternMaxRep: Int = 2
 
-  /** Streaming CEP over a QUANTIFIED pattern (round-12) — the stateful
-    * sibling of the flow cep op's bounded-expansion count mode: the
-    * pattern expands once at plan build (Cep.expandedSteps, `?`/`*`/`+`
-    * as explicit repetition counts up to maxRep) and an event emits a
-    * hit when ANY expansion's window ENDING at that event matches —
-    * existential, one hit per completing event even when several
-    * expansion lengths match (the well-defined streaming analogue of
-    * the batch position count; >maxRep runs are not hits, the same
-    * documented truncation). State per user is the last maxK−1 event
-    * types — still CONSTANT-size per key; per event the machine does
-    * |expansions| suffix checks over that buffer, O(1) for a bounded
-    * pattern. Same deterministic in-batch (ts, event_id) fold as
-    * [[PatternProcessor]], so emission ≡ the batch twin's lag-window
-    * formulation across micro-batch seams. */
-  class PatternAnyProcessor(exps: Seq[Seq[Option[Seq[String]]]])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, PatternHit] {
-    private val maxK = exps.map(_.length).max
-    @transient private var tailState:
-      org.apache.spark.sql.streaming.ValueState[TypeTail] = _
+  /** The PERMUTE pattern shared by [[patternPermuteTws]], its batch twin
+    * (stream_pattern_permute) and the oracle. */
+  val PatternPermute: String = "view>click>purchase"
 
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      tailState = getHandle.getValueState[TypeTail]("atail",
-        org.apache.spark.sql.Encoders.product[TypeTail],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[PatternHit] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var tail = Option(tailState.get()).map(_.tail).getOrElse(Seq.empty)
-      val out = Seq.newBuilder[PatternHit]
-      sorted.foreach { e =>
-        val win = (tail :+ e.event_type).takeRight(maxK)
-        val hit = exps.exists { steps =>
-          val k = steps.length
-          win.size >= k && steps.zip(win.takeRight(k)).forall {
-            case (a, t) => a.forall(_.contains(t))
-          }
-        }
-        if (hit) out += PatternHit(e.user_id, e.event_id)
-        tail = win.takeRight(maxK - 1)
-      }
-      tailState.update(TypeTail(tail))
-      out.result().iterator
-    }
-  }
+  /** One CEP hit: the event that completes a contiguous pattern match. */
+  case class PatternHit(user_id: Long, event_id: Long)
 
   /** One CEP match SPAN: the MEASURES payload — which events matched.
     * first/last ids bound the contiguous window; span_us is exact µs. */
   case class PatternSpan(user_id: Long, first_event_id: Long,
       last_event_id: Long, span_us: Long)
 
-  private case class TypeIdTimeTail(types: Seq[String], ids: Seq[Long],
-      tss: Seq[Long])
+  /** Per-user state of the CEP machine: the user's last maxK−1 events as
+    * aligned (type, event_id, µs ts) columns — CONSTANT-size per key, the
+    * property that makes CEP viable on an unbounded stream. */
+  case class PatternTail(types: Seq[String], ids: Seq[Long], tss: Seq[Long])
 
-  /** Streaming CEP with MEASURES emission (round-12) — the alerting
-    * payload sibling of [[PatternProcessor]]: a hit reports WHICH events
-    * matched (first/last event id and the exact µs span — the
-    * MATCH_RECOGNIZE MEASURES the batch cep_spans op extracts), not just
-    * that one completed. State per user grows to the k−1 (type, id, ts)
-    * triples — still CONSTANT-size per key. Same deterministic in-batch
-    * (ts, event_id) fold, so emission ≡ the batch twin's lag-window
-    * formulation across micro-batch seams; this is the row a
-    * notification sink actually routes (the stream_pattern_alert
-    * kill/restart test's topology with the full payload). */
-  class PatternSpanProcessor(steps: Seq[Option[Seq[String]]])
+  object PatternTail {
+    val Empty: PatternTail = PatternTail(Nil, Nil, Nil)
+  }
+
+  /** The CEP machine's fold — pure, so tests drive it without Spark. A
+    * pattern is a set of literal step sequences (one for a literal
+    * pattern, Cep.expandedSteps' repetitions for a quantified one,
+    * Cep.permuteSteps' orderings for PERMUTE). One user's micro-batch
+    * folds in deterministic (ts, event_id) order, so emission ≡ the batch
+    * twins' lag-window formulation across micro-batch seams. An event
+    * completes a match when ANY expansion's k-event window ENDING at it
+    * matches — existential, one hit per completing event — and spans
+    * ts_last − ts_first ≤ withinUs (Long.MaxValue = unbounded), measured
+    * over the SAVED timestamps, so a match straddling a restart exercises
+    * the restored tss, not just the restored types. A hit's span is that
+    * of the first matching expansion: unambiguous only for a single
+    * expansion, which is why [[patternSpanTws]] takes a literal pattern.
+    * Each event pays |expansions| suffix checks over the constant
+    * buffer — O(1) for a bounded pattern. */
+  def patternStep(exps: Seq[Seq[Option[Seq[String]]]], withinUs: Long,
+      tail: PatternTail, batch: Seq[Event]): (PatternTail, Seq[PatternSpan]) = {
+    val keep = exps.map(_.length).max - 1
+    val out = Seq.newBuilder[PatternSpan]
+    val end = batch.sortBy(e => (micros(e.ts), e.event_id)).foldLeft(tail) {
+      (t, e) =>
+        val types = t.types :+ e.event_type
+        val ids = t.ids :+ e.event_id
+        val tss = t.tss :+ micros(e.ts)
+        val n = types.size
+        exps.find { steps =>
+          val k = steps.length
+          n >= k && tss(n - 1) - tss(n - k) <= withinUs &&
+            steps.zip(types.drop(n - k)).forall { case (a, x) => a.forall(_.contains(x)) }
+        }.foreach { steps =>
+          val k = steps.length
+          out += PatternSpan(e.user_id, ids(n - k), e.event_id, tss(n - 1) - tss(n - k))
+        }
+        PatternTail(types.takeRight(keep), ids.takeRight(keep), tss.takeRight(keep))
+    }
+    (end, out.result())
+  }
+
+  /** Streaming CEP — the `cep` flow op's stateful sibling and the ONE
+    * machine behind every pattern preset below: [[patternStep]] over each
+    * user's event stream, with the [[PatternTail]] in a RocksDB-backed
+    * ValueState. A production deployment would add a TTLConfig to GC
+    * long-idle users (maxK−1 triples each, so NONE here is deliberate). */
+  class PatternMachine(exps: Seq[Seq[Option[Seq[String]]]], withinUs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, Event, PatternSpan] {
-    private val k = steps.length
     @transient private var tailState:
-      org.apache.spark.sql.streaming.ValueState[TypeIdTimeTail] = _
+      org.apache.spark.sql.streaming.ValueState[PatternTail] = _
 
     override def init(outputMode: OutputMode,
         timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      tailState = getHandle.getValueState[TypeIdTimeTail]("stail",
-        org.apache.spark.sql.Encoders.product[TypeIdTimeTail],
+      tailState = getHandle.getValueState[PatternTail]("tail",
+        org.apache.spark.sql.Encoders.product[PatternTail],
         org.apache.spark.sql.streaming.TTLConfig.NONE)
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[PatternSpan] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var tail = Option(tailState.get())
-        .map(t => (t.types, t.ids, t.tss))
-        .getOrElse((Seq.empty[String], Seq.empty[Long], Seq.empty[Long]))
-      val out = Seq.newBuilder[PatternSpan]
-      sorted.foreach { e =>
-        val types = (tail._1 :+ e.event_type).takeRight(k)
-        val ids = (tail._2 :+ e.event_id).takeRight(k)
-        val tss = (tail._3 :+ micros(e.ts)).takeRight(k)
-        if (types.size == k &&
-            steps.zip(types).forall { case (a, t) => a.forall(_.contains(t)) })
-          out += PatternSpan(e.user_id, ids.head, e.event_id,
-            tss.last - tss.head)
-        tail = (types.takeRight(k - 1), ids.takeRight(k - 1),
-          tss.takeRight(k - 1))
-      }
-      tailState.update(TypeIdTimeTail(tail._1, tail._2, tail._3))
-      out.result().iterator
+      val (tail, out) = patternStep(exps, withinUs,
+        Option(tailState.get()).getOrElse(PatternTail.Empty), rows.toSeq)
+      tailState.update(tail)
+      out.iterator
     }
   }
 
-  def patternSpanTws(events: Dataset[Event],
-      pattern: String = PatternAlert): Dataset[PatternSpan] = {
+  private def patternSpans(events: Dataset[Event],
+      exps: Seq[Seq[Option[Seq[String]]]], withinUs: Long): Dataset[PatternSpan] = {
     import events.sparkSession.implicits._
-    val steps = graft.flow.Cep.literalSteps(pattern)
     events
       .withWatermark("ts", "10 minutes")
       .groupByKey(_.user_id)
-      .transformWithState(new PatternSpanProcessor(steps),
+      .transformWithState(new PatternMachine(exps, withinUs),
         org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
   }
 
+  private def patternHits(events: Dataset[Event],
+      exps: Seq[Seq[Option[Seq[String]]]],
+      withinUs: Long = Long.MaxValue): Dataset[PatternHit] = {
+    import events.sparkSession.implicits._
+    patternSpans(events, exps, withinUs)
+      .map(h => PatternHit(h.user_id, h.last_event_id))
+  }
+
+  /** Quantifier-free pattern (alternations + wildcards). */
+  def patternAlertTws(events: Dataset[Event],
+      pattern: String = PatternAlert): Dataset[PatternHit] =
+    patternHits(events, Seq(graft.flow.Cep.literalSteps(pattern)))
+
+  /** "A then B then C within W" — the reference-style signal bound. */
+  def patternWithinTws(events: Dataset[Event],
+      pattern: String = PatternAlert,
+      withinUs: Long = PatternWithinUs): Dataset[PatternHit] =
+    patternHits(events, Seq(graft.flow.Cep.literalSteps(pattern)), withinUs)
+
+  /** MEASURES emission: a hit reports WHICH events matched (the
+    * MATCH_RECOGNIZE MEASURES the batch cep_spans op extracts) — the row
+    * a notification sink actually routes. */
+  def patternSpanTws(events: Dataset[Event],
+      pattern: String = PatternAlert): Dataset[PatternSpan] =
+    patternSpans(events, Seq(graft.flow.Cep.literalSteps(pattern)), Long.MaxValue)
+
+  /** Bounded quantifiers (Cep.expandedSteps; >maxRep runs are not hits,
+    * the flow count mode's documented truncation). */
   def patternQuantifiedTws(events: Dataset[Event],
       pattern: String = PatternQuantified,
-      maxRep: Int = PatternMaxRep): Dataset[PatternHit] = {
-    import events.sparkSession.implicits._
-    val exps = graft.flow.Cep.expandedSteps(pattern, maxRep)
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(new PatternAnyProcessor(exps),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-  }
+      maxRep: Int = PatternMaxRep): Dataset[PatternHit] =
+    patternHits(events, graft.flow.Cep.expandedSteps(pattern, maxRep))
 
-  /** COMPOSED quantified-WITHIN machine (r13 — the r12 verdict's
-    * composition ask): bounded-expansion quantifiers AND the time bound
-    * in ONE processor, because that is where checkpoint bugs hide — a
-    * restore that keeps the type tail but drops (or zeroes) the
-    * timestamp tail passes both single-feature tests and still emits
-    * wrong spans. State per user is the last maxK−1 (type, ts) pairs —
-    * constant per key; each event pays |expansions| suffix checks plus
-    * one long subtraction per candidate length. An expansion of length k
-    * ENDING at this event matches when its k types fit AND
-    * ts_last − ts_first ≤ withinUs, measured over the SAVED timestamps,
-    * so a match straddling a restart exercises the restored tss, not
-    * just the restored types (StreamPipelineSpec kills mid-pattern on
-    * exactly that seam). */
-  class PatternAnyWithinProcessor(exps: Seq[Seq[Option[Seq[String]]]],
-      withinUs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, PatternHit] {
-    private val maxK = exps.map(_.length).max
-    @transient private var tailState:
-      org.apache.spark.sql.streaming.ValueState[TypeTimeTail] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      tailState = getHandle.getValueState[TypeTimeTail]("awtail",
-        org.apache.spark.sql.Encoders.product[TypeTimeTail],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[PatternHit] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var tail = Option(tailState.get())
-        .map(t => (t.types, t.tss))
-        .getOrElse((Seq.empty[String], Seq.empty[Long]))
-      val out = Seq.newBuilder[PatternHit]
-      sorted.foreach { e =>
-        val types = (tail._1 :+ e.event_type).takeRight(maxK)
-        val tss = (tail._2 :+ micros(e.ts)).takeRight(maxK)
-        val hit = exps.exists { steps =>
-          val k = steps.length
-          types.size >= k && steps.zip(types.takeRight(k)).forall {
-            case (a, t) => a.forall(_.contains(t))
-          } && tss.last - tss(tss.size - k) <= withinUs
-        }
-        if (hit) out += PatternHit(e.user_id, e.event_id)
-        tail = (types.takeRight(maxK - 1), tss.takeRight(maxK - 1))
-      }
-      tailState.update(TypeTimeTail(tail._1, tail._2))
-      out.result().iterator
-    }
-  }
-
+  /** Quantifiers AND the time bound in one machine — where checkpoint
+    * bugs hide (StreamPipelineSpec kills mid-pattern on that seam). */
   def patternQuantifiedWithinTws(events: Dataset[Event],
       pattern: String = PatternQuantified,
       maxRep: Int = PatternMaxRep,
-      withinUs: Long = PatternWithinUs): Dataset[PatternHit] = {
-    import events.sparkSession.implicits._
-    val exps = graft.flow.Cep.expandedSteps(pattern, maxRep)
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(new PatternAnyWithinProcessor(exps, withinUs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-  }
+      withinUs: Long = PatternWithinUs): Dataset[PatternHit] =
+    patternHits(events, graft.flow.Cep.expandedSteps(pattern, maxRep), withinUs)
 
-  /** The PERMUTE pattern shared by [[patternPermuteTws]], its batch twin
-    * (stream_pattern_permute) and the oracle. */
-  val PatternPermute: String = "view>click>purchase"
-
-  /** Streaming CEP over a PERMUTE pattern (round-12) — MATCH_RECOGNIZE's
-    * `PERMUTE(view, click, purchase)` as a stateful machine: the k!
-    * orderings (Cep.permuteSteps — same 64-ordering cap as the flow op)
-    * feed the SAME existential any-expansion processor the quantified
-    * machine runs; all orderings share one window length k, so state per
-    * user is the last k−1 event types and each event pays k! suffix
-    * checks over that constant buffer — O(1) for a bounded pattern. */
+  /** MATCH_RECOGNIZE's `PERMUTE(view, click, purchase)`: the k! orderings
+    * (Cep.permuteSteps — same 64-ordering cap as the flow op). */
   def patternPermuteTws(events: Dataset[Event],
-      pattern: String = PatternPermute): Dataset[PatternHit] = {
-    import events.sparkSession.implicits._
-    val exps = graft.flow.Cep.permuteSteps(pattern)
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(new PatternAnyProcessor(exps),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-  }
+      pattern: String = PatternPermute): Dataset[PatternHit] =
+    patternHits(events, graft.flow.Cep.permuteSteps(pattern))
 
   /** One finished session (the gate/flow sessionization signal). */
   case class SessionOut(user_id: Long, n_events: Long, first_event_id: Long,

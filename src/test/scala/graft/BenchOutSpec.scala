@@ -25,4 +25,15 @@ class BenchOutSpec extends AnyFunSuite {
     assert(Bench.resolveOut(None, "20260815T120000", taken) ===
       "bench_20260815T120000_3.json")
   }
+
+  test("fmt3 prints '.' decimals under a comma-decimal default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      assert(Bench.fmt3(1.2344) === "1.234")
+      assert(Bench.fmt3(12.5) === "12.5")
+      assert(Bench.fmt3(3.0) === "3")
+      assert(Bench.fmt3(0.0001) === "0")
+    } finally java.util.Locale.setDefault(saved)
+  }
 }

@@ -171,27 +171,6 @@ class StreamingSpec extends SparkSpec {
     assert(got.toSeq == Seq(3L)) // run of 3 completes across the batch seam
   }
 
-  test("transformWithState alert (RocksDB state) == batch twin") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      implicit val sqlCtx = spark.sqlContext
-      val mem = MemoryStream[Event]
-      val q = StreamOps.statefulAlertTws(mem.toDS()).writeStream
-        .outputMode("append").format("memory").queryName("t_tws").start()
-      mem.addData(typedEvents)
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table("t_tws").as[Alert].collect()
-        .map(a => (a.user_id, a.event_id)).sorted.toSeq
-      val want = SparkEntry.queries("stream_stateful_alert")(spark, sf001)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(got == want)
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("transformWithState CEP pattern machine == batch twin") {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

@@ -22,6 +22,15 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def main(sf, outdir):
     con = duckdb.connect()
+    spill = tempfile.mkdtemp(prefix="duckdb_check_spill_")
+    try:
+        return check(con, spill, sf, outdir)
+    finally:
+        con.close()
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def check(con, spill, sf, outdir):
     con.execute("SET TimeZone='UTC'")
     # r18: an in-memory DuckDB connection cannot offload past its memory
     # limit without a temp_directory, and the trained-index CTE chains at
@@ -32,7 +41,6 @@ def main(sf, outdir):
     # (r19: re-verified unpatched at sf0.01 — see OPTIMIZATION_r19.md).
     # r19 (r18 ADVICE): per-process dir, so concurrent check.py runs (e.g.
     # parallel PROBE fixtures) cannot contend on one shared spill path.
-    spill = tempfile.mkdtemp(prefix="duckdb_check_spill_")
     con.execute(f"SET temp_directory='{spill}'")
     for t in TABLES:
         # testdata ships single parquet FILES; ScaleProbe fixtures are
@@ -97,8 +105,6 @@ def main(sf, outdir):
         else:
             note = f"  [dtype note: {dt}]" if dt else ""
             print(f"PASS {name} ({len(exp)} rows){note}")
-    con.close()
-    shutil.rmtree(spill, ignore_errors=True)
     print(f"\n{len(oracle) - len(failures)}/{len(oracle)} oracled queries pass")
     return 1 if failures else 0
 
