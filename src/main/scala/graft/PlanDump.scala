@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round instrumentation: dumps `.explain("formatted")` for the
@@ -19,14 +18,7 @@ object PlanDump {
       else keysCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val unknown = keys.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     Preflight(spark, sfDir)
     // capture pre-pin segment plans too: a pinned chain's real plan shape
     // lives in the segments the lineage cuts hide from the final explain

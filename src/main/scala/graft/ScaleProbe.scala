@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Superlinearity probe fixture builder (r13 verdict #7): synthesizes a
@@ -32,14 +32,7 @@ object ScaleProbe {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
     require(factor >= 2, s"factor must be >= 2, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(out).mkdirs()
 
     def write(df: DataFrame, name: String): Unit =

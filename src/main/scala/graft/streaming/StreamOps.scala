@@ -704,9 +704,10 @@ object StreamOps {
   /** STREAMING semantic dedup (r16) — the vector twin of
     * [[nearDedupStream]]: an ingest stream of (vec_id, embedding) rows
     * checked per micro-batch against a STATIC base corpus's cell-sized
-    * two-level index (graft.operators.DedupOps.cellSizedDupFlags — the
-    * same (base, delta) core `llm_ivf2_dedup_incremental` proves under
-    * the oracle). foreachBatch is the deliberate shape, not a fallback:
+    * two-level index (graft.operators.Ivf.baseIndex in its resident form
+    * — the same (base, delta) core `llm_ivf2_dedup_incremental` proves
+    * under the oracle); both frames are raw (vec_id, embedding).
+    * foreachBatch is the deliberate shape, not a fallback:
     * each trigger's batch IS the delta, so the window ranks and keyed
     * joins of the two-level assignment run as ordinary batch plans per
     * trigger, and per-batch output lands idempotently (batch-id
@@ -725,14 +726,15 @@ object StreamOps {
     // base join, and the pin count stays constant over an unbounded
     // stream (building it inside foreachBatch would localCheckpoint new
     // RDDs every trigger: the monotone-registry leak the soaks catch)
-    val index = graft.operators.DedupOps.cellSizedBaseIndex(base)
+    val index = graft.operators.Ivf.baseIndex(
+      graft.operators.IvfSpec.CellSized, base, resident = true)
     vecs.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         // the micro-batch executes under a CLONED session state — the
         // graft expression registry must exist there too, or the
         // call_function("graft_dot_f") nodes fail analysis
         graft.functions.GraftFunctions.registerAll(batch.sparkSession)
-        graft.operators.DedupOps.cellSizedDupFlagsOn(index, base, batch)
+        graft.operators.DedupOps.dupFlagsOn(index, batch)
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
     }
   }

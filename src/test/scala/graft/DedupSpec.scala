@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.{Ivf, IvfSpec}
+import graft.operators.IvfSpec.{Adaptive, PerCell}
 
 /** Golden/recall tests for the non-oracle-able dedup & ANN operators
   * (SimHash, MinHash pair extraction, LSH ANN) and the multimodal stub. */
@@ -109,7 +111,7 @@ class DedupSpec extends SparkSpec {
         (0 until 2).map(j => (300L + j, jittered(3, j)))
     val emb = rows.toDF("vec_id", "embedding")
     val got = graft.operators.DedupOps
-      .semanticKeep(emb, trainIters = 0, probe = 2, l1Probes = 1).collect()
+      .semanticKeep(emb, IvfSpec(Adaptive(64, 1), 0, 2)).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     val clusters = Map(
       1L -> Seq(1L, 100L, 101L, 102L, 103L, 104L),
@@ -160,8 +162,7 @@ class DedupSpec extends SparkSpec {
     assert(cos > 0.99, s"fixture drift: cos(y1,y2) = $cos")
     val emb = rows.toDF("vec_id", "embedding")
     val got = graft.operators.DedupOps
-      .semanticKeepCellSized(emb, targetCellSize = 8,
-        trainIters = 0, probe = 2, l1Probes = 1).collect()
+      .semanticKeep(emb, IvfSpec(PerCell(8, 1), 0, 2)).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     val compA = Seq(0L, 3L, 4L, 5L, 6L, 7L, 8L, 19L)
     val compBC = Seq(1L, 2L, 9L, 10L, 11L, 12L, 13L, 14L,
@@ -197,7 +198,7 @@ class DedupSpec extends SparkSpec {
         (48L, oneHot(40))) // identical to 38: delta-delta out of scope
     val emb = rows.toDF("vec_id", "embedding")
     val got = graft.operators.DedupOps.semanticIncrementalSurvivors(emb,
-        trainIters = 0, probe = 2, l1Probes = 1)
+        IvfSpec(Adaptive(64, 1), 0, 2))
       .collect().map(_.getLong(0)).toSeq
     assert(got == Seq(38L, 48L), s"survivors: $got")
   }
@@ -227,10 +228,35 @@ class DedupSpec extends SparkSpec {
         (48L, oneHot(40))) // identical to 38: delta-delta out of scope
     val emb = rows.toDF("vec_id", "embedding")
     val got = graft.operators.DedupOps
-      .semanticIncrementalCellSized(emb, targetCellSize = 2,
-        trainIters = 0, probe = 2, l1Probes = 1)
+      .semanticIncrementalSurvivors(emb, IvfSpec(PerCell(2, 1), 0, 2))
       .collect().map(_.getLong(0)).toSeq
     assert(got == Seq(38L, 48L), s"survivors: $got")
+  }
+
+  test("vector entry points reject a caller-supplied norm column") {
+    // The index computes the canonical float-dot norm itself: a frame
+    // arriving with its own `norm` (here a planted wrong one) must fail
+    // loudly instead of silently shifting every cosine verdict.
+    def oneHot(i: Int): Array[Float] = {
+      val a = Array.fill(64)(0f); a(i) = 1f; a
+    }
+    val emb = (0 until 8).map(i => (i.toLong, oneHot(i)))
+      .toDF("vec_id", "embedding")
+    val wrong = emb.withColumn("norm", lit(2.0))
+    val ops = graft.operators.DedupOps
+    Seq[(String, () => Any)](
+      "semanticKeep" -> (() => ops.semanticKeep(wrong)),
+      "semanticKeep cell" -> (() => ops.semanticKeep(wrong, IvfSpec.CellSized)),
+      "survivors" -> (() => ops.semanticIncrementalSurvivors(wrong)),
+      "dupFlags base" -> (() => ops.dupFlags(IvfSpec.CellSized, wrong, emb)),
+      "dupFlags delta" -> (() => ops.dupFlags(IvfSpec.Auto, emb, wrong)),
+      "selfJoin" -> (() => Ivf.selfJoin(IvfSpec.SqrtTrained, wrong)),
+      "resident index" -> (() =>
+        Ivf.baseIndex(IvfSpec.CellSized, wrong, resident = true))
+    ).foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("`norm`"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("cell-sized dedup: randomized parity vs exhaustive reference (10 runs)") {
@@ -285,8 +311,7 @@ class DedupSpec extends SparkSpec {
         .flatMap(comp => comp.map(_ -> comp.min)).toMap
       val emb = (0 until n).map(i => (i.toLong, vecs(i))).toDF("vec_id", "embedding")
       val got = graft.operators.DedupOps
-        .semanticKeepCellSized(emb, tau, C,
-          trainIters = 0, probe = 2, l1Probes = 1).collect()
+        .semanticKeep(emb, IvfSpec(PerCell(C, 1), 0, 2), tau).collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
       (0 until n).foreach { i =>
         val want = (label(i).toLong, label(i) == i)
@@ -299,21 +324,32 @@ class DedupSpec extends SparkSpec {
 
   test("TRAINED cell-sized dedup: randomized parity vs exhaustive reference (6 runs)") {
     // The r18 twin of the untrained randomized parity above, at the
-    // PRODUCTION constants (TrainIters, ProbeCells, L1Probes): an
-    // independent exhaustive Scala reference replays the full trained
+    // PRODUCTION constants (IvfSpec.CellSized's iters, probe, l1Probes):
+    // an independent exhaustive Scala reference replays the full trained
     // pipeline — L1 flat Lloyd (argmax assignment, exact floor(x·1e7)
     // long sums, empty-cell carryover), two-level L2 refinement, the
-    // widened top-L1Probes ranking with assignment = its rank 1, probes,
+    // widened top-l1Probes ranking with assignment = its rank 1, probes,
     // τ edges, components — mirroring the engine's arithmetic domains
     // exactly (float-fold norms for vectors, double-fold for centroids,
     // sim = dot / (norm · cnorm), HALF_UP 4dp only at the τ gate). Any
     // silent drift in the update rule, seed rule, tie-breaks, or probe
-    // membership diverges some seed.
+    // membership diverges some seed. The same reference also replays the
+    // TRAINED √n index (flat Lloyd over ceil(√n) seeds, flat ranking) —
+    // the one IvfSpec.Auto runs at every graded sf — and the incremental
+    // %10 base/delta split for BOTH levels (index trained on base only,
+    // base rows assigned, delta rows probing), checked against the
+    // verdict entry over that base index (dupFlagsOn).
     val C = 4
     val tau = 0.5
-    val iters = graft.operators.DedupOps.TrainIters
-    val probe = graft.operators.DedupOps.ProbeCells
-    val l1p = graft.operators.DedupOps.L1Probes
+    val l1Probes = IvfSpec.CellSized.cells match {
+      case PerCell(_, p) => p
+      case other => fail(s"CellSized is two-level, got $other")
+    }
+    val cellSpec = IvfSpec.CellSized.copy(cells = PerCell(C, l1Probes))
+    val sqrtSpec = IvfSpec.SqrtTrained
+    val iters = cellSpec.iters
+    assert(sqrtSpec.iters == iters)
+    var verdicts = Set.empty[Boolean]
     def dFF(a: Array[Float], b: Array[Float]): Double = {
       var s = 0.0; var i = 0
       while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }; s
@@ -332,86 +368,136 @@ class DedupSpec extends SparkSpec {
       val dim = 8
       val vecs = Array.fill(n)(Array.fill(dim)(rnd.nextFloat() * 2f - 1f))
       val norms = vecs.map(v => math.sqrt(dFF(v, v)))
-      val nlist = math.ceil(n / C.toDouble).toInt
-      val m = math.ceil(math.sqrt(nlist.toDouble)).toInt
+      // a codebook: (cid, centroid) rows in ascending cid order
+      type Book = Seq[(Int, Array[Double])]
       def simVC(v: Int, c: Array[Double]): Double =
         dFD(vecs(v), c) / (norms(v) * math.sqrt(dDD(c, c)))
+      def simCC(c: Array[Double], l: Array[Double]): Double =
+        dDD(c, l) / (math.sqrt(dDD(c, c)) * math.sqrt(dDD(l, l)))
       // argmax under (sim desc, id asc): ascending scan, strict improve
       def best(sims: Seq[(Int, Double)]): Int =
         sims.reduceLeft((p, q) => if (q._2 > p._2) q else p)._1
-      def quantSums(members: Map[Int, Seq[Int]], old: Array[Array[Double]])
-          : Array[Array[Double]] =
-        old.zipWithIndex.map { case (prev, cid) =>
-          members.get(cid) match {
+      def ranked(v: Int, book: Book): Seq[Int] =
+        book.sortBy { case (cid, c) => (-simVC(v, c), cid) }.map(_._1)
+      // id-threshold seeds: the training rows with vec_id < k
+      def seeds(ids: Seq[Int], k: Int): Book =
+        ids.filter(_ < k).map(i => i -> vecs(i).map(_.toDouble))
+      def quantSums(book: Book, assign: Seq[(Int, Int)]): Book = {
+        val members = assign.groupBy(_._2).map { case (cid, vs) =>
+          cid -> vs.map(_._1) }
+        book.map { case (cid, prev) =>
+          cid -> (members.get(cid) match {
             case Some(ms) if ms.nonEmpty =>
               Array.tabulate(dim)(p => ms.map(v =>
                 math.floor(vecs(v)(p).toDouble * 1e7).toLong).sum.toDouble)
             case _ => prev
-          }
+          })
         }
-      def trainFlatRef(k: Int): Array[Array[Double]] = {
-        var c = Array.tabulate(k)(i => vecs(i).map(_.toDouble))
-        for (_ <- 1 to iters) {
-          val assign = (0 until n).map(v =>
-            v -> best((0 until k).map(cid => cid -> simVC(v, c(cid)))))
-          c = quantSums(assign.groupBy(_._2).map { case (cid, vs) =>
-            cid -> vs.map(_._1) }, c)
-        }
+      }
+      def trainFlatRef(ids: Seq[Int], k: Int): Book = {
+        var c = seeds(ids, k)
+        for (_ <- 1 to iters)
+          c = quantSums(c, ids.map(v =>
+            v -> best(c.map { case (cid, cc) => cid -> simVC(v, cc) })))
         c
       }
-      val l1 = trainFlatRef(m)
-      def vecL1Ranked(v: Int): Seq[Int] =
-        (0 until m).sortBy(l => (-simVC(v, l1(l)), l))
-      val vl1 = (0 until n).map(v => v -> vecL1Ranked(v).head).toMap
-      var c2 = Array.tabulate(nlist)(i => vecs(i).map(_.toDouble))
-      def simCC(c: Array[Double], l: Array[Double]): Double =
-        dDD(c, l) / (math.sqrt(dDD(c, c)) * math.sqrt(dDD(l, l)))
-      for (_ <- 1 to iters) {
-        val c2l1 = (0 until nlist).map(cid =>
-          cid -> best((0 until m).map(l => l -> simCC(c2(cid), l1(l))))).toMap
-        val assign = (0 until n).flatMap { v =>
-          val cands = (0 until nlist).filter(cid => c2l1(cid) == vl1(v))
-          if (cands.isEmpty) None
-          else Some(v -> best(cands.map(cid => cid -> simVC(v, c2(cid)))))
+      // each index below maps a row to its cells, best first
+      def flatRef(ids: Seq[Int]): Int => Seq[Int] = {
+        val c = trainFlatRef(ids, math.ceil(math.sqrt(ids.size.toDouble)).toInt)
+        v => ranked(v, c)
+      }
+      def twoLevelRef(ids: Seq[Int]): Int => Seq[Int] = {
+        val nlist = math.ceil(ids.size / C.toDouble).toInt
+        val m = math.ceil(math.sqrt(nlist.toDouble)).toInt
+        val l1 = trainFlatRef(ids, m)
+        def c2l1Of(book: Book): Map[Int, Int] = book.map { case (cid, c) =>
+          cid -> best(l1.map { case (l, lc) => l -> simCC(c, lc) }) }.toMap
+        var c2 = seeds(ids, nlist)
+        for (_ <- 1 to iters) {
+          val c2l1 = c2l1Of(c2)
+          val assign = ids.flatMap { v =>
+            val top = ranked(v, l1).head
+            val cands = c2.filter { case (cid, _) => c2l1(cid) == top }
+            if (cands.isEmpty) None
+            else Some(v -> best(cands.map { case (cid, c) => cid -> simVC(v, c) }))
+          }
+          c2 = quantSums(c2, assign)
         }
-        c2 = quantSums(assign.groupBy(_._2).map { case (cid, vs) =>
-          cid -> vs.map(_._1) }, c2)
+        val c2l1 = c2l1Of(c2)
+        v => {
+          val l1s = ranked(v, l1).take(l1Probes).toSet
+          ranked(v, c2.filter { case (cid, _) => l1s(c2l1(cid)) })
+        }
       }
-      val c2l1 = (0 until nlist).map(cid =>
-        cid -> best((0 until m).map(l => l -> simCC(c2(cid), l1(l))))).toMap
-      def rankedCells(v: Int): Seq[Int] = {
-        val l1s = vecL1Ranked(v).take(l1p).toSet
-        (0 until nlist).filter(cid => l1s(c2l1(cid)))
-          .sortBy(cid => (-simVC(v, c2(cid)), cid))
+      def round4(x: Double): Double =
+        BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      def near(p: (Long, Long)): Boolean = {
+        val (q, t) = (p._1.toInt, p._2.toInt)
+        round4(dFF(vecs(q), vecs(t)) / (norms(q) * norms(t))) >= tau
       }
-      val ranked = (0 until n).map(v => v -> rankedCells(v)).toMap
-      val assign = ranked.map { case (v, cells) => v -> cells.head }
-      val probes = ranked.map { case (v, cells) => v -> cells.take(probe).toSet }
-      val edges = for {
-        q <- 0 until n; t <- 0 until n
-        if q != t && probes(q).contains(assign(t))
-        if BigDecimal(dFF(vecs(q), vecs(t)) / (norms(q) * norms(t)))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble >= tau
-      } yield (math.min(q, t), math.max(q, t))
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int =
-        if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra) = rb
+      // candidates: every query q probes its top-`probe` cells and meets
+      // each target t assigned (rank 1) to one of them
+      def candRef(cells: Int => Seq[Int], probe: Int, qs: Seq[Int],
+          ts: Seq[Int]): Set[(Long, Long)] = {
+        val assign = ts.flatMap(t => cells(t).headOption.map(t -> _))
+        qs.flatMap { q =>
+          val probes = cells(q).take(probe).toSet
+          assign.collect { case (t, cell) if q != t && probes(cell) =>
+            (q.toLong, t.toLong) }
+        }.toSet
       }
-      val label = (0 until n).groupBy(find).values
-        .flatMap(comp => comp.map(_ -> comp.min)).toMap
+      def keepRef(cand: Set[(Long, Long)]): Map[Long, (Long, Boolean)] = {
+        val parent = Array.tabulate(n)(identity)
+        def find(x: Int): Int =
+          if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+        cand.filter(near).foreach { case (a, b) =>
+          val (ra, rb) = (find(a.toInt), find(b.toInt)); if (ra != rb) parent(ra) = rb
+        }
+        (0 until n).groupBy(find).values.flatMap(comp =>
+          comp.map(i => i.toLong -> ((comp.min.toLong, comp.min == i)))).toMap
+      }
+      val all = 0 until n
+      val baseIds = all.filter(_ % 10 < 8)
+      val deltaIds = all.filter(_ % 10 >= 8)
+      def dupRef(cand: Set[(Long, Long)]): Map[Long, Boolean] =
+        deltaIds.map(q => q.toLong -> cand.exists(p => p._1 == q && near(p))).toMap
       val emb = (0 until n).map(i => (i.toLong, vecs(i))).toDF("vec_id", "embedding")
-      val got = graft.operators.DedupOps
-        .semanticKeepCellSized(emb, tau, C).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
-      (0 until n).foreach { i =>
-        val want = (label(i).toLong, label(i) == i)
-        assert(got(i.toLong) == want,
-          s"seed $seed n $n vec $i: got ${got(i.toLong)}, want $want")
+      val base = emb.filter(col("vec_id") % 10 < 8)
+      val delta = emb.filter(col("vec_id") % 10 >= 8)
+      def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      def check[A](what: String, got: Iterable[A], want: Iterable[A]): Unit =
+        assert(got.toSet == want.toSet && got.size == want.size,
+          s"$what seed $seed n $n: got-only ${got.toSet -- want}, " +
+            s"want-only ${want.toSet -- got}")
+      Seq[(String, IvfSpec, Seq[Int] => Int => Seq[Int])](
+        ("cell", cellSpec, twoLevelRef), ("√n", sqrtSpec, flatRef)
+      ).foreach { case (name, spec, indexRef) =>
+        val selfCand = candRef(indexRef(all), spec.probe, all, all)
+        val deltaCand = candRef(indexRef(baseIds), spec.probe, deltaIds, baseIds)
+        // each index is built once: the keep-list and verdict tails run
+        // over the same pinned index whose candidates were just checked.
+        // Both tails are index-independent, so the seeds alternate which
+        // spec feeds them (odd seeds the cell spec, even seeds √n).
+        val tails = (seed % 2 == 1) == (spec == cellSpec)
+        val self = Ivf.selfJoin(spec, emb)
+        check(s"$name candidates", pairs(self._1), selfCand)
+        if (tails)
+          check(s"$name keep", graft.operators.DedupOps.semanticKeepFrom(emb, self, tau)
+            .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))),
+            keepRef(selfCand))
+        val ix = Ivf.baseIndex(spec, base, resident = false)
+        check(s"$name delta candidates", pairs(Ivf.deltaCandidates(ix, delta)._1),
+          deltaCand)
+        val dup = dupRef(deltaCand)
+        if (tails)
+          check(s"$name dup", graft.operators.DedupOps.dupFlagsOn(ix, delta, tau)
+            .collect().map(r => r.getLong(0) -> r.getBoolean(1)), dup)
+        verdicts ++= dup.values
       }
-      assert(got.size == n)
     }
+    assert(verdicts == Set(true, false),
+      "the seeds should flag some delta rows and pass others")
   }
 
   test("lsh signer rejects non-64-dim embeddings loudly") {
@@ -769,10 +855,8 @@ class DedupSpec extends SparkSpec {
     }
     def counts(n: Int): (Long, Long) = {
       val emb = corpus(n)
-      val sqrtCand = graft.operators.DedupOps
-        .ivfCandidatesTrainedOf(emb)._1.count()
-      val cellCand = graft.operators.DedupOps
-        .ivfCandidatesCellSizedOf(emb)._1.count()
+      val sqrtCand = Ivf.selfJoin(IvfSpec.SqrtTrained, emb)._1.count()
+      val cellCand = Ivf.selfJoin(IvfSpec.CellSized, emb)._1.count()
       (sqrtCand, cellCand)
     }
     val below = (graft.operators.DedupOps.IvfAutoCrossover / 2).toInt // 2048
@@ -801,7 +885,8 @@ class DedupSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val auto = graft.operators.DedupOps.semanticKeep(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    val cell = graft.operators.DedupOps.semanticKeepCellSized(emb).collect()
+    val cell = graft.operators.DedupOps.semanticKeep(emb, IvfSpec.CellSized)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     assert(auto.size == n)
     assert(auto == cell,
@@ -823,7 +908,8 @@ class DedupSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val auto = graft.operators.DedupOps.semanticIncrementalSurvivors(emb)
       .collect().map(_.getLong(0)).toSeq
-    val cell = graft.operators.DedupOps.semanticIncrementalCellSized(emb)
+    val cell = graft.operators.DedupOps
+      .semanticIncrementalSurvivors(emb, IvfSpec.CellSized)
       .collect().map(_.getLong(0)).toSeq
     assert(auto.nonEmpty)
     assert(auto == cell,

@@ -79,7 +79,7 @@ class PlanAuditSpec extends SparkSpec {
     "llm_ivf_scaled_ann" -> ivfCodebook,
     "llm_ivf_trained_ann" -> // r18: the Lloyd iterations re-score the
       // corpus against the broadcast (≤ ceil(√n)-row) codebook once per
-      // iteration — same shape as the final assignment scan, ×TrainIters
+      // iteration — same shape as the final assignment scan, × the spec's Lloyd rounds
       ivfCodebook,
     "llm_ann_adaptive_recall" -> // adaptive stage + the sampled baseline
       "labeled brute-force recall baseline over a bounded query sample",
