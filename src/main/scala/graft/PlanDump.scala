@@ -1,16 +1,34 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 
 /** Optimization-round instrumentation: dumps `.explain("formatted")` for the
   * named keys into an output dir (`plans/r18/<key>_<tag>.txt`), plus a
-  * stderr line per key with (plan-build ms, first-noop-exec ms) so planning
-  * cost and execution cost can be attributed separately. Read-only with
-  * respect to the registry — never changes what a key computes.
+  * stderr line per key with its exchange count. Read-only with respect to
+  * the registry — never changes what a key computes.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> key1,key2,...
   *        (keys = "all" dumps every registry key)
   */
 object PlanDump {
+
+  /** Shuffle and broadcast exchange nodes in the pre-execution plan,
+    * subqueries included. AQE's initial plan is fixed before any stage
+    * runs, so the count does not move with the runtime join choices of the
+    * final plan, and reused exchanges (a later stage's re-read of an
+    * earlier one) are not nodes of their own. */
+  private[graft] def exchanges(plan: SparkPlan): Int = plan match {
+    case a: AdaptiveSparkPlanExec => exchanges(a.initialPlan)
+    case p =>
+      val own = p match {
+        case _: ShuffleExchangeLike | _: BroadcastExchangeLike => 1
+        case _ => 0
+      }
+      own + (p.children ++ p.subqueries).map(exchanges).sum
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, keysCsv) = args.take(4)
     val keys: Seq[String] =
@@ -27,10 +45,8 @@ object PlanDump {
     keys.foreach { name =>
       try {
         graft.operators.Scale.drainAuditPlans(): Unit
-        val t0 = System.nanoTime()
         val df = SparkEntry.queries(name)(spark, sfDir)
         val planned = df.queryExecution.executedPlan // forces analysis+optimization+planning
-        val t1 = System.nanoTime()
         val segs = graft.operators.Scale.drainAuditPlans()
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode) +
@@ -39,12 +55,9 @@ object PlanDump {
               p.treeString
           }.mkString
         Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), txt)
-        df.write.format("noop").mode("overwrite").save()
-        val t2 = System.nanoTime()
-        val exchanges = txt.linesIterator.count(_.contains("Exchange"))
-        System.err.println(f"[plandump] $name plan_ms=${(t1 - t0) / 1e6}%.0f " +
-          f"exec_ms=${(t2 - t1) / 1e6}%.0f exchanges=$exchanges " +
-          f"plan_lines=${txt.linesIterator.size} ok=${planned != null}")
+        System.err.println(s"[plandump] $name " +
+          s"exchanges=${(planned +: segs).map(exchanges).sum} " +
+          s"plan_lines=${txt.linesIterator.size}")
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       }

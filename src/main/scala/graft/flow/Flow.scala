@@ -262,7 +262,7 @@ object Flow {
         // hand the READ-BACK frame to the next step, so flows can chain
         // past a materialization point (the reference's sink→source
         // handoff). The path is keyed by (tag, input dir) like every
-        // scratch table — two input dirs in one JVM must not collide.
+        // scratch dir — two input dirs in one JVM must not collide.
         val tag = str(st, "tag")
         require(tag.matches("[A-Za-z0-9_]+"),
           s"flow: write tag must be [A-Za-z0-9_]+, got '$tag'")
@@ -272,9 +272,7 @@ object Flow {
         require(!df.isStreaming,
           "flow: 'write' is batch-only — a streaming flow ends at the " +
             "caller's writeStream sink, not a mid-flow 'write' step")
-        val path = new java.io.File(new java.io.File(
-          sys.props("java.io.tmpdir"), "graft_scratch"),
-          s"flow_${tag}_${graft.operators.Scale.dirTag(dir)}").toString
+        val path = graft.operators.Scale.scratchDir(s"flow_$tag", dir)
         df.write.mode("overwrite").parquet(path)
         s.read.parquet(path)
       case "join" =>

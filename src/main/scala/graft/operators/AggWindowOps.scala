@@ -860,9 +860,7 @@ object AggWindowOps {
     // column is the verification twin.
     "agg_sketch_upsert" -> Q(
       (s, d) => {
-        val dir = new java.io.File(new java.io.File(
-          sys.props("java.io.tmpdir"), "graft_scratch"),
-          s"cmscube_${Scale.dirTag(d)}").toString
+        val dir = Scale.scratchDir("cmscube", d)
         val KSP = graft.streaming.KeepSetPublish
         def cellsOf(df: org.apache.spark.sql.DataFrame) = df
           .select(col("event_type"),
@@ -872,7 +870,7 @@ object AggWindowOps {
               "substr(md5(concat_ws(':', rw, event_type)), 1, 1)) - 1"))
           .groupBy(col("rw"), col("bucket"))
           .agg(count(lit(1)).as("c"))
-        if (!KSP.latestEpoch(dir).contains(1L)) {
+        Scale.writeOnce(dir) {
           KSP.publish(cellsOf(
             T(s, d, "events").filter(col("event_id") % 3 =!= 2)), dir, 0L)
           val delta = cellsOf(

@@ -55,6 +55,54 @@ object EventOps {
       .withColumn("session_seq",
         sum(col("new_session")).over(arrivalW.rowsBetween(Window.unboundedPreceding, 0)))
 
+  /** Each session's first 8 events, `rn` = arrival position: the bound
+    * the path and pattern keys put on a session BEFORE collecting it, so a
+    * bot session with 10^6 events contributes 8 rows, not 10^6. */
+  private def sessionHead(s: SparkSession, d: String): DataFrame = {
+    val bySession = Window.partitionBy(col("user_id"), col("session_seq"))
+      .orderBy(col("ts"), col("event_id"))
+    sessionized(s, d)
+      .withColumn("rn", row_number().over(bySession))
+      .filter(col("rn") <= 8)
+  }
+
+  /** A grouped session head's event types in arrival order, `>`-joined. */
+  private def headTypes: Column = concat_ws(">", transform(
+    sort_array(collect_list(struct(col("rn"), col("event_type")))),
+    x => x.getField("event_type")))
+
+  /** (user_id, session_seq, path): the session head as a `>`-terminated
+    * token path, the field the flow `cep` op matches. */
+  private def sessionPaths(s: SparkSession, d: String): DataFrame =
+    sessionHead(s, d).groupBy(col("user_id"), col("session_seq"))
+      .agg(concat(headTypes, lit(">")).as("path"))
+
+  /** DuckDB twin of [[sessionized]]: opens a WITH with the `se` CTE. */
+  private val sessionCte =
+    "WITH se AS (SELECT user_id, event_id, event_type, ts, " +
+      "SUM(CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > 1800.0 " +
+      "THEN 1 ELSE 0 END::BIGINT) OVER (PARTITION BY user_id " +
+      "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
+      "CURRENT ROW) AS session_seq FROM (SELECT user_id, event_id, " +
+      "event_type, ts, lag(ts, 1) OVER (PARTITION BY user_id " +
+      "ORDER BY ts, event_id) AS prev_ts FROM events) x), "
+
+  /** The `rn` CTE: each event's arrival position in its session. */
+  private val rankCte =
+    "rn AS (SELECT user_id, session_seq, event_type, row_number() OVER " +
+      "(PARTITION BY user_id, session_seq ORDER BY ts, event_id) AS rn " +
+      "FROM se), "
+
+  /** DuckDB twin of [[sessionPaths]]: the se, rn and `p` (path) CTEs. */
+  private val pathCtes = sessionCte + rankCte +
+    "p AS (SELECT user_id, session_seq, string_agg(event_type || '>', '' " +
+    "ORDER BY rn) AS path FROM rn WHERE rn <= 8 GROUP BY 1, 2)"
+
+  /** [[pathCtes]] plus `tk`, each path split back into its token list. */
+  private val tokCtes = pathCtes +
+    ", tk AS (SELECT list_filter(string_split(path, '>'), x -> x != '') " +
+    "AS toks FROM p), "
+
   private val sessionizeSql: String = usEvents(
     "SELECT user_id, session_seq::BIGINT AS session_seq, COUNT(*) AS n_events, " +
       "MIN(event_id) AS first_event_id, MAX(event_id) AS last_event_id, " +
@@ -1663,28 +1711,13 @@ object EventOps {
     // agg_string_concat documents). Top-10 ties break on path text.
     "evt_top_paths" -> Q(
       (s, d) => {
-        val bySession = Window.partitionBy(col("user_id"), col("session_seq"))
-          .orderBy(col("ts"), col("event_id"))
-        sessionized(s, d)
-          .withColumn("rn", row_number().over(bySession))
-          .filter(col("rn") <= 8)
+        sessionHead(s, d)
           .groupBy(col("user_id"), col("session_seq"))
-          .agg(concat_ws(">", transform(
-            sort_array(collect_list(struct(col("rn"), col("event_type")))),
-            x => x.getField("event_type"))).as("path"))
+          .agg(headTypes.as("path"))
           .groupBy(col("path")).agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("path")).limit(10)
       },
-      usEvents("WITH se AS (SELECT user_id, event_id, event_type, ts, " +
-        "SUM(CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > 1800.0 " +
-        "THEN 1 ELSE 0 END::BIGINT) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-        "CURRENT ROW) AS session_seq FROM (SELECT user_id, event_id, " +
-        "event_type, ts, lag(ts, 1) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id) AS prev_ts FROM events) x), " +
-        "rn AS (SELECT user_id, session_seq, event_type, row_number() OVER " +
-        "(PARTITION BY user_id, session_seq ORDER BY ts, event_id) AS rn " +
-        "FROM se), " +
+      usEvents(sessionCte + rankCte +
         "p AS (SELECT user_id, session_seq, string_agg(event_type, '>' " +
         "ORDER BY rn) AS path FROM rn WHERE rn <= 8 GROUP BY 1, 2) " +
         "SELECT path, COUNT(*) AS n FROM p GROUP BY 1 " +
@@ -2131,15 +2164,7 @@ object EventOps {
     // both regex matches ride ONE projection; output is 4 rows.
     "evt_pattern_match" -> Q(
       (s, d) => {
-        val bySession = Window.partitionBy(col("user_id"), col("session_seq"))
-          .orderBy(col("ts"), col("event_id"))
-        val paths = sessionized(s, d)
-          .withColumn("rn", row_number().over(bySession))
-          .filter(col("rn") <= 8)
-          .groupBy(col("user_id"), col("session_seq"))
-          .agg(concat(concat_ws(">", transform(
-            sort_array(collect_list(struct(col("rn"), col("event_type")))),
-            x => x.getField("event_type"))), lit(">")).as("path"))
+        val paths = sessionPaths(s, d)
         val cepSpec =
           """{"steps":[
             |{"op":"cep","field":"path","as":"m_browse_buy",
@@ -2152,19 +2177,7 @@ object EventOps {
         graft.flow.Flow.compileOn(s, d, paths, cepSpec)
           .orderBy(col("m_browse_buy"), col("m_error_recovery"))
       },
-      usEvents("WITH se AS (SELECT user_id, event_id, event_type, ts, " +
-        "SUM(CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > 1800.0 " +
-        "THEN 1 ELSE 0 END::BIGINT) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-        "CURRENT ROW) AS session_seq FROM (SELECT user_id, event_id, " +
-        "event_type, ts, lag(ts, 1) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id) AS prev_ts FROM events) x), " +
-        "rn AS (SELECT user_id, session_seq, event_type, row_number() OVER " +
-        "(PARTITION BY user_id, session_seq ORDER BY ts, event_id) AS rn " +
-        "FROM se), " +
-        "p AS (SELECT user_id, session_seq, string_agg(event_type || '>', '' " +
-        "ORDER BY rn) AS path FROM rn WHERE rn <= 8 GROUP BY 1, 2) " +
-        "SELECT regexp_matches(path, '" +
+      usEvents(pathCtes + " SELECT regexp_matches(path, '" +
         graft.flow.Cep.compile("view>(view|click)*>purchase") +
         "') AS m_browse_buy, regexp_matches(path, '" +
         graft.flow.Cep.compile("error>.*>purchase") +
@@ -2183,15 +2196,7 @@ object EventOps {
     // pattern inside one projection; output is ONE row.
     "evt_pattern_count" -> Q(
       (s, d) => {
-        val bySession = Window.partitionBy(col("user_id"), col("session_seq"))
-          .orderBy(col("ts"), col("event_id"))
-        val paths = sessionized(s, d)
-          .withColumn("rn", row_number().over(bySession))
-          .filter(col("rn") <= 8)
-          .groupBy(col("user_id"), col("session_seq"))
-          .agg(concat(concat_ws(">", transform(
-            sort_array(collect_list(struct(col("rn"), col("event_type")))),
-            x => x.getField("event_type"))), lit(">")).as("path"))
+        val paths = sessionPaths(s, d)
         val spec =
           """{"steps":[
             |{"op":"cep","field":"path","as":"c_vc","mode":"count",
@@ -2207,20 +2212,7 @@ object EventOps {
             |]}""".stripMargin
         graft.flow.Flow.compileOn(s, d, paths, spec)
       },
-      usEvents("WITH se AS (SELECT user_id, event_id, event_type, ts, " +
-        "SUM(CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > 1800.0 " +
-        "THEN 1 ELSE 0 END::BIGINT) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-        "CURRENT ROW) AS session_seq FROM (SELECT user_id, event_id, " +
-        "event_type, ts, lag(ts, 1) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id) AS prev_ts FROM events) x), " +
-        "rn AS (SELECT user_id, session_seq, event_type, row_number() OVER " +
-        "(PARTITION BY user_id, session_seq ORDER BY ts, event_id) AS rn " +
-        "FROM se), " +
-        "p AS (SELECT user_id, session_seq, string_agg(event_type || '>', '' " +
-        "ORDER BY rn) AS path FROM rn WHERE rn <= 8 GROUP BY 1, 2), " +
-        "tk AS (SELECT list_filter(string_split(path, '>'), x -> x != '') " +
-        "AS toks FROM p), " +
+      usEvents(tokCtes +
         "c AS (SELECT " +
         "CASE WHEN len(toks) >= 2 THEN len(list_filter(" +
         "generate_series(1, len(toks) - 1), i -> toks[i] = 'view' AND " +
@@ -2248,16 +2240,9 @@ object EventOps {
     // same rn≤8 cap, one session window + one keyed agg, output ONE row.
     "evt_pattern_within" -> Q(
       (s, d) => {
-        val bySession = Window.partitionBy(col("user_id"), col("session_seq"))
-          .orderBy(col("ts"), col("event_id"))
-        val paths = sessionized(s, d)
-          .withColumn("rn", row_number().over(bySession))
-          .filter(col("rn") <= 8)
+        val paths = sessionHead(s, d)
           .groupBy(col("user_id"), col("session_seq"))
-          .agg(
-            concat(concat_ws(">", transform(
-              sort_array(collect_list(struct(col("rn"), col("event_type")))),
-              x => x.getField("event_type"))), lit(">")).as("path"),
+          .agg(concat(headTypes, lit(">")).as("path"),
             transform(
               sort_array(collect_list(struct(col("rn"),
                 unix_micros(col("ts")).as("eus")))),
@@ -2276,13 +2261,7 @@ object EventOps {
             |]}""".stripMargin
         graft.flow.Flow.compileOn(s, d, paths, spec)
       },
-      usEvents("WITH se AS (SELECT user_id, event_id, event_type, ts, " +
-        "SUM(CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > 1800.0 " +
-        "THEN 1 ELSE 0 END::BIGINT) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-        "CURRENT ROW) AS session_seq FROM (SELECT user_id, event_id, " +
-        "event_type, ts, lag(ts, 1) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id) AS prev_ts FROM events) x), " +
+      usEvents(sessionCte +
         "rn AS (SELECT user_id, session_seq, event_type, epoch_us(ts) AS eus, " +
         "row_number() OVER (PARTITION BY user_id, session_seq " +
         "ORDER BY ts, event_id) AS rn FROM se), " +
@@ -2315,11 +2294,7 @@ object EventOps {
     // ≤8-token session, never corpus-quadratic. Integer µs everywhere.
     "evt_pattern_measures" -> Q(
       (s, d) => {
-        val bySession = Window.partitionBy(col("user_id"), col("session_seq"))
-          .orderBy(col("ts"), col("event_id"))
-        sessionized(s, d)
-          .withColumn("rn", row_number().over(bySession))
-          .filter(col("rn") <= 8)
+        sessionHead(s, d)
           .groupBy(col("user_id"), col("session_seq"))
           .agg(sort_array(collect_list(struct(col("rn"), col("event_type"),
             col("event_id"), unix_micros(col("ts")).as("eus")))).as("seq"))
@@ -2341,13 +2316,7 @@ object EventOps {
               .as("duration_us"))
           .orderBy(col("user_id"), col("session_seq"), col("start_rn"))
       },
-      usEvents("WITH se AS (SELECT user_id, event_id, event_type, ts, " +
-        "SUM(CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > 1800.0 " +
-        "THEN 1 ELSE 0 END::BIGINT) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-        "CURRENT ROW) AS session_seq FROM (SELECT user_id, event_id, " +
-        "event_type, ts, lag(ts, 1) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id) AS prev_ts FROM events) x), " +
+      usEvents(sessionCte +
         "rn AS (SELECT user_id, session_seq, event_type, event_id, " +
         "epoch_us(ts) AS eus, row_number() OVER (PARTITION BY user_id, " +
         "session_seq ORDER BY ts, event_id) AS rn FROM se), " +
@@ -2384,15 +2353,7 @@ object EventOps {
     // CepSpec pins overlap ≥ nonoverlap and the exact greedy scan.
     "evt_pattern_nonoverlap" -> Q(
       (s, d) => {
-        val bySession = Window.partitionBy(col("user_id"), col("session_seq"))
-          .orderBy(col("ts"), col("event_id"))
-        val paths = sessionized(s, d)
-          .withColumn("rn", row_number().over(bySession))
-          .filter(col("rn") <= 8)
-          .groupBy(col("user_id"), col("session_seq"))
-          .agg(concat(concat_ws(">", transform(
-            sort_array(collect_list(struct(col("rn"), col("event_type")))),
-            x => x.getField("event_type"))), lit(">")).as("path"))
+        val paths = sessionPaths(s, d)
         val spec =
           """{"steps":[
             |{"op":"cep","field":"path","as":"c_all","mode":"count",
@@ -2407,20 +2368,7 @@ object EventOps {
             |]}""".stripMargin
         graft.flow.Flow.compileOn(s, d, paths, spec)
       },
-      usEvents("WITH se AS (SELECT user_id, event_id, event_type, ts, " +
-        "SUM(CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > 1800.0 " +
-        "THEN 1 ELSE 0 END::BIGINT) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-        "CURRENT ROW) AS session_seq FROM (SELECT user_id, event_id, " +
-        "event_type, ts, lag(ts, 1) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id) AS prev_ts FROM events) x), " +
-        "rn AS (SELECT user_id, session_seq, event_type, row_number() OVER " +
-        "(PARTITION BY user_id, session_seq ORDER BY ts, event_id) AS rn " +
-        "FROM se), " +
-        "p AS (SELECT user_id, session_seq, string_agg(event_type || '>', '' " +
-        "ORDER BY rn) AS path FROM rn WHERE rn <= 8 GROUP BY 1, 2), " +
-        "tk AS (SELECT list_filter(string_split(path, '>'), x -> x != '') " +
-        "AS toks FROM p), " +
+      usEvents(tokCtes +
         "st AS (SELECT toks, CASE WHEN len(toks) >= 2 THEN " +
         "list_filter(generate_series(1, len(toks) - 1), i -> " +
         "toks[i] IN ('view', 'click') AND toks[i+1] IN ('view', 'click')) " +
@@ -2451,15 +2399,7 @@ object EventOps {
     // expand to 3 + 2 sequences; same rn≤8 session bound; ONE row out.
     "evt_pattern_quantified" -> Q(
       (s, d) => {
-        val bySession = Window.partitionBy(col("user_id"), col("session_seq"))
-          .orderBy(col("ts"), col("event_id"))
-        val paths = sessionized(s, d)
-          .withColumn("rn", row_number().over(bySession))
-          .filter(col("rn") <= 8)
-          .groupBy(col("user_id"), col("session_seq"))
-          .agg(concat(concat_ws(">", transform(
-            sort_array(collect_list(struct(col("rn"), col("event_type")))),
-            x => x.getField("event_type"))), lit(">")).as("path"))
+        val paths = sessionPaths(s, d)
         val spec =
           """{"steps":[
             |{"op":"cep","field":"path","as":"c_bb","mode":"count",
@@ -2475,20 +2415,7 @@ object EventOps {
             |]}""".stripMargin
         graft.flow.Flow.compileOn(s, d, paths, spec)
       },
-      usEvents("WITH se AS (SELECT user_id, event_id, event_type, ts, " +
-        "SUM(CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > 1800.0 " +
-        "THEN 1 ELSE 0 END::BIGINT) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-        "CURRENT ROW) AS session_seq FROM (SELECT user_id, event_id, " +
-        "event_type, ts, lag(ts, 1) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id) AS prev_ts FROM events) x), " +
-        "rn AS (SELECT user_id, session_seq, event_type, row_number() OVER " +
-        "(PARTITION BY user_id, session_seq ORDER BY ts, event_id) AS rn " +
-        "FROM se), " +
-        "p AS (SELECT user_id, session_seq, string_agg(event_type || '>', '' " +
-        "ORDER BY rn) AS path FROM rn WHERE rn <= 8 GROUP BY 1, 2), " +
-        "tk AS (SELECT list_filter(string_split(path, '>'), x -> x != '') " +
-        "AS toks FROM p), " +
+      usEvents(tokCtes +
         // the same existential OR over the expansions, with the same
         // CASE-guarded windows for the longer ones
         "c AS (SELECT " +
@@ -2527,15 +2454,7 @@ object EventOps {
     // truth for the ordering set. Same rn≤8 session bound; ONE row out.
     "evt_pattern_permute" -> Q(
       (s, d) => {
-        val bySession = Window.partitionBy(col("user_id"), col("session_seq"))
-          .orderBy(col("ts"), col("event_id"))
-        val paths = sessionized(s, d)
-          .withColumn("rn", row_number().over(bySession))
-          .filter(col("rn") <= 8)
-          .groupBy(col("user_id"), col("session_seq"))
-          .agg(concat(concat_ws(">", transform(
-            sort_array(collect_list(struct(col("rn"), col("event_type")))),
-            x => x.getField("event_type"))), lit(">")).as("path"))
+        val paths = sessionPaths(s, d)
         val spec =
           """{"steps":[
             |{"op":"cep","field":"path","as":"c_perm","mode":"count",
@@ -2553,20 +2472,7 @@ object EventOps {
             s"toks[i+$j] = '$t'"
           }.mkString(" AND ") + ")")
           .mkString(" OR ")
-        "WITH se AS (SELECT user_id, event_id, event_type, ts, " +
-          "SUM(CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > 1800.0 " +
-          "THEN 1 ELSE 0 END::BIGINT) OVER (PARTITION BY user_id " +
-          "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-          "CURRENT ROW) AS session_seq FROM (SELECT user_id, event_id, " +
-          "event_type, ts, lag(ts, 1) OVER (PARTITION BY user_id " +
-          "ORDER BY ts, event_id) AS prev_ts FROM events) x), " +
-          "rn AS (SELECT user_id, session_seq, event_type, row_number() OVER " +
-          "(PARTITION BY user_id, session_seq ORDER BY ts, event_id) AS rn " +
-          "FROM se), " +
-          "p AS (SELECT user_id, session_seq, string_agg(event_type || '>', '' " +
-          "ORDER BY rn) AS path FROM rn WHERE rn <= 8 GROUP BY 1, 2), " +
-          "tk AS (SELECT list_filter(string_split(path, '>'), x -> x != '') " +
-          "AS toks FROM p), " +
+        tokCtes +
           "c AS (SELECT CASE WHEN len(toks) >= 3 THEN len(list_filter(" +
           "generate_series(1, len(toks) - 2), i -> " +
           orBranches + ")) ELSE 0 END AS c_perm FROM tk) " +

@@ -14,12 +14,6 @@ import graft.Dsl._
   */
 object RelationalOps {
 
-  /** Fixed per-query scratch path, overwritten each run — repeated
-    * bench/verify invocations must not accumulate temp copies in /tmp. */
-  private def scratch(name: String): String =
-    new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_scratch"), name).toString
-
   val defs: Seq[(String, Q)] = Seq(
 
     // ---- §2.A scans --------------------------------------------------
@@ -53,7 +47,7 @@ object RelationalOps {
     // Durable sink: write to a temp parquet dir, read it back (round-trip).
     "sink_parquet" -> Q(
       (s, d) => {
-        val tmp = scratch("sink_parquet_events")
+        val tmp = Scale.scratchDir("sink_parquet_events", d)
         T(s, d, "events")
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
           .write.mode("overwrite").parquet(tmp)
@@ -77,37 +71,27 @@ object RelationalOps {
     // right) drive the REAL graft.streaming.UpsertSink epoch protocol,
     // upserting by user_id with external version (ts, event_id); the key
     // returns the read-back of the live target state. Every run after the
-    // first is a pure marker-gated snapshot read (the keepset replay
-    // contract); crash/replay/restart exactly-once is pinned in
+    // first in an application is a pure snapshot read (Scale.writeOnce);
+    // crash/replay/restart exactly-once is pinned in
     // UpsertSinkSpec. Oracle: the pure-relational twin — each user's
     // highest-version event — which is exactly what a keyed external store
     // would hold after ANY at-least-once delivery of these events.
     "sink_upsert_keyed" -> Q(
       (s, d) => {
         import graft.streaming.UpsertSink
-        val dir = new java.io.File(new java.io.File(
-          sys.props("java.io.tmpdir"), "graft_scratch"),
-          // version-in-path (the snapshotOnce rule, r14 advice): bump _v
-          // when the key's SEMANTICS change (versionCols, batching, op
-          // encoding) so a committed state a prior build left in tmpdir
-          // can never satisfy the newer contract
-          s"upsert_k_v1_${Scale.dirTag(d)}_${Scale.contentTag(d)}").toString
-        // applyBatch is called UNCONDITIONALLY — its per-batch marker check
-        // IS the replay guard, so a rerun after a crash between batches
-        // resumes at the first uncommitted epoch instead of trusting a
-        // partial target forever (an isEmpty(dir) gate would; review r14).
-        // Committed runs skip every batch before any job.
-        val ev = T(s, d, "events").select(col("user_id"), col("event_id"),
-          col("ts"), col("event_type"), col("value"))
-        for (b <- 0 to 2)
-          UpsertSink.applyBatch(dir, b.toLong,
-            ev.filter(pmod(col("event_id"), lit(3)) === b),
-            keyCols = Seq("user_id"),
-            versionCols = Seq("ts", "event_id")): Unit
-        // retire prior generations of this corpus's target (older _v, older
-        // contentTags) — the snapshotOnce GC discipline (r14 advice)
-        Scale.gcStaleScratch(new java.io.File(dir).getParentFile,
-          "upsert_k_v", s"_${Scale.dirTag(d)}_", new java.io.File(dir).getName)
+        val dir = Scale.scratchDir("upsert_k", d)
+        // writeOnce runs the batches once per application; a failed run is
+        // retried, and applyBatch's per-batch marker check resumes it at the
+        // first uncommitted epoch instead of trusting a partial target.
+        Scale.writeOnce(dir) {
+          val ev = T(s, d, "events").select(col("user_id"), col("event_id"),
+            col("ts"), col("event_type"), col("value"))
+          for (b <- 0 to 2)
+            UpsertSink.applyBatch(dir, b.toLong,
+              ev.filter(pmod(col("event_id"), lit(3)) === b),
+              keyCols = Seq("user_id"),
+              versionCols = Seq("ts", "event_id")): Unit
+        }
         UpsertSink.readState(s, dir)
           .select(col("user_id"), col("event_id"),
             big(unix_micros(col("ts"))).as("ts_us"),
@@ -132,21 +116,18 @@ object RelationalOps {
     "sink_upsert_tombstone" -> Q(
       (s, d) => {
         import graft.streaming.UpsertSink
-        val dir = new java.io.File(new java.io.File(
-          sys.props("java.io.tmpdir"), "graft_scratch"),
-          // version-in-path, as in sink_upsert_keyed (r14 advice)
-          s"upsert_ts_v1_${Scale.dirTag(d)}_${Scale.contentTag(d)}").toString
-        val ev = T(s, d, "events").select(col("user_id"), col("event_id"),
-          col("ts"), col("event_type"), col("value"),
-          when(pmod(col("event_id"), lit(7)) === 0, lit("D"))
-            .otherwise(lit("U")).as("op"))
-        for (b <- 0 to 2)
-          UpsertSink.applyBatch(dir, b.toLong,
-            ev.filter(pmod(col("event_id"), lit(3)) === b),
-            keyCols = Seq("user_id"),
-            versionCols = Seq("ts", "event_id")): Unit
-        Scale.gcStaleScratch(new java.io.File(dir).getParentFile,
-          "upsert_ts_v", s"_${Scale.dirTag(d)}_", new java.io.File(dir).getName)
+        val dir = Scale.scratchDir("upsert_ts", d)
+        Scale.writeOnce(dir) {
+          val ev = T(s, d, "events").select(col("user_id"), col("event_id"),
+            col("ts"), col("event_type"), col("value"),
+            when(pmod(col("event_id"), lit(7)) === 0, lit("D"))
+              .otherwise(lit("U")).as("op"))
+          for (b <- 0 to 2)
+            UpsertSink.applyBatch(dir, b.toLong,
+              ev.filter(pmod(col("event_id"), lit(3)) === b),
+              keyCols = Seq("user_id"),
+              versionCols = Seq("ts", "event_id")): Unit
+        }
         UpsertSink.readLive(s, dir, "op")
           .select(col("user_id"), col("event_id"),
             big(unix_micros(col("ts"))).as("ts_us"),
@@ -166,7 +147,7 @@ object RelationalOps {
     // exact (doubles included) — the oracle is the original table.
     "source_orc_roundtrip" -> Q(
       (s, d) => {
-        val tmp = scratch("source_orc_supplier")
+        val tmp = Scale.scratchDir("source_orc_supplier", d)
         T(s, d, "supplier").write.mode("overwrite").orc(tmp)
         s.read.orc(tmp).orderBy(col("s_suppkey"))
       },
@@ -179,7 +160,7 @@ object RelationalOps {
     // container file per partition out, one task per file back).
     "source_avro_roundtrip" -> Q(
       (s, d) => {
-        val tmp = scratch("source_avro_supplier")
+        val tmp = Scale.scratchDir("source_avro_supplier", d)
         val sup = T(s, d, "supplier")
         graft.sources.AvroIO.write(sup, tmp)
         graft.sources.AvroIO.read(s, tmp, sup.schema)
@@ -200,7 +181,7 @@ object RelationalOps {
     // GateSourceSpec.
     "source_gate_topic" -> Q(
       (s, d) => {
-        val tmp = scratch("source_gate_topic")
+        val tmp = Scale.scratchDir("source_gate_topic", d)
         graft.streaming.GateTopic.write(T(s, d, "events"), tmp, 4,
           segmentRows = 1024)
         graft.streaming.GateTopic.readBatch(s, tmp)
@@ -223,7 +204,7 @@ object RelationalOps {
       (s, d) => {
         // own scratch dir (NOT source_gate_topic's): sharing would let
         // this key's rewrite race that key's lazy read of the same files
-        val tmp = scratch("stream_topic_agg")
+        val tmp = Scale.scratchDir("stream_topic_agg", d)
         graft.streaming.GateTopic.write(T(s, d, "events"), tmp, 4,
           segmentRows = 1024)
         graft.streaming.GateTopic.readBatch(s, tmp)
@@ -237,7 +218,7 @@ object RelationalOps {
 
     "source_csv_roundtrip" -> Q(
       (s, d) => {
-        val tmp = scratch("source_csv_nation")
+        val tmp = Scale.scratchDir("source_csv_nation", d)
         T(s, d, "nation").write.mode("overwrite")
           .option("header", "true").csv(tmp)
         s.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT")
@@ -259,7 +240,7 @@ object RelationalOps {
     // read is a plain distributed CSV scan — per-row parse, no driver state.
     "source_csv_permissive" -> Q(
       (s, d) => {
-        val tmp = scratch("source_csv_malformed")
+        val tmp = Scale.scratchDir("source_csv_malformed", d)
         T(s, d, "nation").select(concat_ws(",",
             col("n_nationkey"), col("n_name"),
             when(col("n_nationkey") % 5 === 0, lit("xx"))
@@ -298,7 +279,7 @@ object RelationalOps {
     // stay byte-identical at any file count.
     "source_binary_files" -> Q(
       (s, d) => {
-        val tmp = scratch("source_binary_langs")
+        val tmp = Scale.scratchDir("source_binary_langs", d)
         T(s, d, "documents").select(col("lang"), col("text"), col("doc_id"))
           .repartition(1)
           .sortWithinPartitions(col("lang"), col("doc_id"))
@@ -328,7 +309,7 @@ object RelationalOps {
     // Doubles survive: Spark writes shortest round-trip representations.
     "source_json_roundtrip" -> Q(
       (s, d) => {
-        val tmp = scratch("source_json_part")
+        val tmp = Scale.scratchDir("source_json_part", d)
         T(s, d, "part").write.mode("overwrite").json(tmp)
         s.read.schema("p_partkey LONG, p_name STRING, p_brand STRING, " +
             "p_type STRING, p_size INT, p_retailprice DOUBLE").json(tmp)
@@ -345,7 +326,7 @@ object RelationalOps {
     // single-line text (verified: round-trip is identity).
     "source_text_roundtrip" -> Q(
       (s, d) => {
-        val tmp = scratch("source_text_documents")
+        val tmp = Scale.scratchDir("source_text_documents", d)
         T(s, d, "documents")
           .select(concat_ws("\t", col("doc_id"), col("text")).as("value"))
           .write.mode("overwrite").text(tmp)

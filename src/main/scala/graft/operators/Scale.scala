@@ -10,34 +10,46 @@ import org.apache.spark.sql.functions._
   */
 object Scale {
 
-  /** Scratch tables (bucketed/partitioned rewrites of an input) are written
-    * once per (key, input) per JVM: the write is setup, not the measured
-    * query, and at scale it would be a one-time ETL step, not a per-query
-    * cost. Memoized in-memory (not on path existence) so a NEW input dir in
-    * the same session still triggers a rewrite, and a fresh JVM never trusts
-    * a stale on-disk table from a previous run. */
-  private val scratchDone = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
+  /** Root of every scratch directory a registry key materializes: one
+    * folder in the driver's SparkFiles root, the per-application temp dir
+    * that `SparkEnv.stop` deletes when the SparkContext stops. Scratch
+    * therefore never outlives its application, so no path has to name the
+    * code version or the input's content. */
+  private def scratchRoot: java.io.File =
+    new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(), "graft_scratch")
 
-  /** Runs `write` once per memoKey per JVM (thread-safe, exceptions retryable).
+  /** The scratch directory of `name` over input dir `input` in the running
+    * application — the one path function for layouts, fixtures, sinks and
+    * committed snapshots. */
+  def scratchDir(name: String, input: String): String =
+    new java.io.File(scratchRoot, s"${name}_${dirTag(input)}").toString
+
+  private val scratchDone = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicBoolean]()
+
+  /** Runs `write` once per key per JVM (thread-safe, exceptions retryable).
+    * Scratch writes pass their resolved [[scratchDir]], so a new
+    * SparkContext in the same JVM (a new root) never trusts a memo entry
+    * whose files Spark deleted at stop. The write runs under its key's own
+    * lock, not inside the map's update, because writes nest: a publish may
+    * compose another key's snapshot.
     *
-    * A memo HIT counts as a snapshot read (r18 verdict #3): every writeOnce
-    * caller reads the materialized layout back as its input, so a rep whose
+    * A memo HIT counts as a snapshot read: every caller reads the
+    * materialized layout or publish back as its input, so a rep whose
     * write was skipped timed read-back, not the derivation — exactly what
-    * the `snapshot_backed` bench flag exists to label. snapshotOnce already
-    * counted its marker hits; this closes the ScaleOps-private gap (sorted/
-    * zorder/compact/evolve/manifest layouts, dpp fixtures, schema_evo,
-    * timetravel, snapexpire, partitioned-scan, cbo/bucketed tables). */
-  def writeOnce(memoKey: String)(write: => Unit): Unit = {
-    var wrote = false
-    scratchDone.computeIfAbsent(memoKey, _ => { write; wrote = true; true }): Unit
-    if (!wrote) snapshotReads.incrementAndGet(): Unit
+    * the `snapshot_backed` bench flag exists to label. */
+  def writeOnce(key: String)(write: => Unit): Unit = {
+    val done = scratchDone.computeIfAbsent(key,
+      _ => new java.util.concurrent.atomic.AtomicBoolean(false))
+    done.synchronized {
+      if (done.get) snapshotReads.incrementAndGet(): Unit
+      else { write; done.set(true) }
+    }
   }
 
-  /** Stable short suffix tying a scratch resource NAME to its input: the
-    * memo is per (input, name), so the materialized table/path must be
-    * per-input too — otherwise a second input dir in the same JVM would
-    * overwrite the first's scratch tables and a later memo hit on the
-    * first dir would silently read the wrong data. */
+  /** Stable short suffix tying a scratch resource NAME to its input: one
+    * JVM may read several input dirs (sf0.001 and sf0.01), and each needs
+    * its own materialized table/path. */
   def dirTag(input: String): String = graft.Dsl.md5Hex(input).take(8)
 
   /** Two-phase aggregation for skewed group keys: pre-aggregate on
@@ -272,31 +284,11 @@ object Scale {
 
   /** Compute-once COMMITTED snapshot of an expensive shared frame, via
     * KeepSetPublish's marker-last epoch protocol: the first caller per
-    * (name, input dir) computes and publishes epoch 0; every later caller
-    * — same run, a replay after a crash, or another key composing the
-    * same stage — reads the committed parquet back without running any
-    * job. `version` is part of the path: bump it when the computing
-    * logic's SEMANTICS change, so a stale snapshot from an older build
-    * can never satisfy a newer contract. */
-  /** Cheap content fingerprint of an input dir: md5 over the recursive
-    * (relative-path, size, mtime) listing — metadata-only, no data read.
-    * Folded into every snapshot name so regenerating fixtures IN PLACE
-    * under the same path invalidates prior snapshots instead of silently
-    * serving stale data (the cross-JVM staleness the r11 advice flagged).
-    * The same contract an Iceberg/Delta snapshot id gives a table cache. */
-  def contentTag(inputDir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val root = new java.io.File(inputDir)
-    val sig = walk(root).map(f =>
-      s"${f.getAbsolutePath.stripPrefix(root.getAbsolutePath)}:${f.length}:${f.lastModified}")
-      .mkString("\n")
-    graft.Dsl.md5Hex(sig).take(8)
-  }
-
+    * (name, input dir) in an application computes and publishes epoch 0;
+    * every later caller — a later rep, or another key composing the same
+    * stage — reads the committed parquet back without running any job. */
   def snapshotOnce(spark: org.apache.spark.sql.SparkSession, name: String,
-      version: Int, inputDir: String)(compute: => DataFrame): DataFrame = {
+      inputDir: String)(compute: => DataFrame): DataFrame = {
     // plan-audit capture (r15): a committed snapshot hides its compute's
     // plan from PlanAuditSpec exactly like a pin hides its upstream —
     // under spark.graft.plan.audit the compute frame is BUILT (planning
@@ -308,58 +300,22 @@ object Scale {
         recordForAudit(f)
         Some(f)
       } else None
-    val parent = new java.io.File(sys.props("java.io.tmpdir"), "graft_scratch")
-    val dir = new java.io.File(parent,
-      s"snap_${name}_v${version}_${dirTag(inputDir)}_${contentTag(inputDir)}").toString
-    if (graft.streaming.KeepSetPublish.latestEpoch(dir).isEmpty) {
-      graft.streaming.KeepSetPublish.publish(
-        audited.getOrElse(compute), dir, 0L): Unit
-      // a successful publish retires this (name, input dir)'s OLDER
-      // generations — prior logic versions and prior contentTags (each
-      // fixture regeneration otherwise strands a snapshot forever; r14
-      // advice: unbounded tmpdir growth on long-lived machines). Other
-      // input dirs (different dirTag) are other corpora and stay.
-      gcStaleScratch(parent, s"snap_${name}_v", s"_${dirTag(inputDir)}_",
-        keep = new java.io.File(dir).getName)
-    } else snapshotReads.incrementAndGet(): Unit
+    val dir = scratchDir(s"snap_$name", inputDir)
+    writeOnce(dir)(graft.streaming.KeepSetPublish.publish(
+      audited.getOrElse(compute), dir, 0L): Unit)
     graft.streaming.KeepSetPublish.readLatest(spark, dir)
   }
 
-  /** Count of [[snapshotOnce]] calls since the last drain that SERVED a
-    * committed snapshot (marker hit, zero compute) instead of publishing
-    * one. Bench drains this per key to label snapshot-backed timings in
-    * the artifact itself (r17 verdict #2 — a later judge recomputing
-    * doubling exponents from the committed vectors artifacts must be
-    * able to see which rows measure read-back, without the PERF prose).
-    * Runtime truth, not a hand-maintained list: the flag reflects what
-    * the timed rep actually did. */
+  /** Count of [[writeOnce]] calls since the last drain that SERVED an
+    * earlier write (memo hit, zero compute) instead of writing. Bench
+    * drains this per key to label snapshot-backed timings in the artifact
+    * itself: runtime truth, not a hand-maintained list — the flag reflects
+    * what the timed rep actually did. */
   private val snapshotReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** True iff any snapshotOnce call since the previous drain was a
-    * committed read-back; resets the counter. */
+  /** True iff any [[writeOnce]] call since the previous drain was a
+    * read-back; resets the counter. */
   def drainSnapshotReads(): Boolean = snapshotReads.getAndSet(0L) > 0L
-
-  /** Deletes sibling scratch dirs of a just-published generation: every
-    * directory under `parent` whose name starts with `prefix` and
-    * contains `dirTagPart` except `keep`. Marker-FIRST deletion (the
-    * KeepSetPublish.expire pattern): commit markers vanish before any
-    * data bytes, so a concurrent reader stops trusting a stale snapshot
-    * before it can observe a half-deleted one. */
-  private[graft] def gcStaleScratch(parent: java.io.File, prefix: String,
-      dirTagPart: String, keep: String): Unit =
-    Option(parent.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith(prefix) &&
-        f.getName.contains(dirTagPart) && f.getName != keep)
-      .foreach { stale =>
-        Option(stale.listFiles()).toSeq.flatten
-          .filter(_.getName.endsWith(".commit"))
-          .foreach(m => java.nio.file.Files.deleteIfExists(m.toPath): Unit)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          java.nio.file.Files.deleteIfExists(f.toPath): Unit
-        }
-        rm(stale)
-      }
 
   /** 32-bit Morton (Z-order) code: bit i of `x` → output bit 2i, bit i of
     * `y` → output bit 2i+1, over the low 16 bits of each. Sorting a table

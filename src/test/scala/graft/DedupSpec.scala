@@ -646,9 +646,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ann index upsert: replay short-circuits on the marker, results stable") {
-    val dir = new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_scratch"),
-      s"annindex_v2_${graft.operators.Scale.dirTag(sf001)}").toString
+    val dir = graft.operators.Scale.scratchDir("annindex", sf001)
     val r1 = SparkEntry.queries("llm_ann_index_upsert")(spark, sf001)
       .collect().map(_.toSeq).toSeq
     assert(graft.streaming.KeepSetPublish.latestEpoch(dir).contains(1L))

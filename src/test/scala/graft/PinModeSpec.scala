@@ -76,7 +76,7 @@ class PinModeSpec extends SparkSpec {
   test("snapshotOnce computes once; replays and siblings read the commit") {
     val input = java.nio.file.Files.createTempDirectory("snap_in").toString
     var computes = 0
-    def call(n: Int) = Scale.snapshotOnce(spark, "spec_probe", 1, input) {
+    def call(n: Int) = Scale.snapshotOnce(spark, "spec_probe", input) {
       computes += 1
       spark.range(n).toDF("id")
     }
@@ -84,33 +84,15 @@ class PinModeSpec extends SparkSpec {
     // second call must NOT evaluate the compute thunk — the committed
     // epoch satisfies it (so it returns the OLD 5 rows, not 9)
     assert(call(9).count() == 5 && computes == 1)
-    // a version bump invalidates the old snapshot by path — and its
-    // publish GARBAGE-COLLECTS the v1 generation (r14 advice: stranded
-    // snapshots otherwise accumulate one dir per fixture regeneration)
-    val v2 = Scale.snapshotOnce(spark, "spec_probe", 2, input) {
-      spark.range(9).toDF("id")
-    }
-    assert(v2.count() == 9)
-    val parent = new java.io.File(sys.props("java.io.tmpdir"), "graft_scratch")
-    // GC is scoped to THIS input dir's tag — other dirTags are other
-    // corpora (and other test runs' temp inputs) and must stay untouched
-    val tag = s"_${Scale.dirTag(input)}_"
-    val gens = Option(parent.listFiles()).toSeq.flatten
-      .filter(f => f.getName.startsWith("snap_spec_probe_v") &&
-        f.getName.contains(tag)).map(_.getName)
-    assert(gens.forall(_.startsWith("snap_spec_probe_v2_")),
-      s"v2 publish must retire the v1 generation, found: $gens")
-    assert(gens.nonEmpty)
-    // an UNRELATED name sharing a prefix must NOT be swept: the _v anchor
-    // separates snap_spec_probe_v* from snap_spec_probe_other_v*
-    val other = Scale.snapshotOnce(spark, "spec_probe_other", 1, input) {
+    // a sibling name sharing a prefix is its own snapshot
+    val other = Scale.snapshotOnce(spark, "spec_probe_other", input) {
       spark.range(3).toDF("id")
     }
     assert(other.count() == 3)
-    assert(Scale.snapshotOnce(spark, "spec_probe", 2, input) {
+    assert(Scale.snapshotOnce(spark, "spec_probe", input) {
       sys.error("must not recompute")
-    }.count() == 9)
-    assert(Scale.snapshotOnce(spark, "spec_probe_other", 1, input) {
+    }.count() == 5)
+    assert(Scale.snapshotOnce(spark, "spec_probe_other", input) {
       sys.error("must not recompute")
     }.count() == 3)
   }

@@ -223,4 +223,18 @@ class PlanAuditSpec extends SparkSpec {
         s"${v.size} pre-pin plan regression(s):\n${v.mkString("\n")}")
     } finally spark.conf.unset("spark.graft.plan.audit")
   }
+
+  test("PlanDump counts exchange nodes of the pre-execution plan") {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val agg = spark.range(0, 1000).withColumn("k", col("id") % 10)
+      .groupBy("k").count()
+    val df = agg.join(broadcast(agg.withColumnRenamed("count", "c2")), "k")
+    // one shuffle per aggregate side plus the broadcast; the count reads
+    // the initial plan, so running the query (AQE re-planning, exchange
+    // reuse) must not move it
+    val before = PlanDump.exchanges(df.queryExecution.executedPlan)
+    df.collect(): Unit
+    assert(before == 3)
+    assert(PlanDump.exchanges(df.queryExecution.executedPlan) == before)
+  }
 }

@@ -12,7 +12,8 @@ import sys
 
 KEY_RE = re.compile(
     r'"((?:scan|source|sink|sql|project|filter|drop|join|sort|topk|set|agg'
-    r'|win|fn|evt|stream|llm|mm|sub|sample|scale|dq|flow)_[a-z0-9_]+)"\s*:\s*'
+    r'|win|fn|evt|stream|llm|mm|sub|sample|scale|dq|flow|graph)_[a-z0-9_]+)"'
+    r'\s*:\s*'
     r'([0-9]+(?:\.[0-9]+)?)')
 
 
