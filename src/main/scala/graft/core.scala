@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType}
 
 /** One declared operator: the Spark query plus (optionally) its DuckDB
   * oracle SQL twin. Oracle SQL uses bare table names (`lineitem`, `events`,
@@ -33,12 +33,50 @@ object T {
     // wall-clock maps to the same instants because the session TZ is UTC
     // (every graft entry point configures UTC); Preflight fails loudly if
     // a Spark upgrade changes how the column surfaces.
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events" &&
         df.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
       df.withColumn("ts", col("ts").cast("timestamp"))
     else df
   }
+
+  /** (application id, path, last-modified) → parquet schema. Parquet
+    * schema inference is a Spark job per read; a table's schema is
+    * resolved once per application and per version of its files, and
+    * every later open reads with it. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), StructType]()
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a table directory's files are rewritten under new names, so its
+    // newest entry stamps the version
+    val st = fs.getFileStatus(p)
+    val stamp = (if (st.isDirectory) st +: fs.listStatus(p).toSeq else Seq(st))
+      .map(_.getModificationTime).max
+    schemas.computeIfAbsent((spark.sparkContext.applicationId, path, stamp),
+      _ => spark.read.parquet(path).schema)
+  }
+
+  /** The partition count of [[byKey]] and [[byOrder]]:
+    * `spark.sql.shuffle.partitions`, which every graft session sets to its
+    * core count. An explicit count is one AQE never coalesces. */
+  private def parts(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** Spreads a table that scans as one split (events at the graded scales
+    * is one row group) over every core: hash-partitioned on `key`. The
+    * exchange satisfies every later window and aggregate clustered on
+    * `key`, so a per-key chain gains no Exchange. */
+  def byKey(df: DataFrame, key: Column): DataFrame = df.repartition(parts(df), key)
+
+  /** [[byKey]]'s ordered form: range-partitioned on `order`, which also
+    * satisfies the chain's final ORDER BY on that column, so the range
+    * sampler reads the scan, not the expensive per-row work above it. */
+  def byOrder(df: DataFrame, order: Column): DataFrame =
+    df.repartitionByRange(parts(df), order)
 }
 
 /** Shared determinism helpers (SURVEY.md §7.4). */

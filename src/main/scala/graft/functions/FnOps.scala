@@ -68,7 +68,7 @@ object FnOps {
         "FROM part ORDER BY p_partkey"),
 
     "fn_grok_extract" -> Q(
-      (s, d) => T(s, d, "part")
+      (s, d) => T.byOrder(T(s, d, "part"), col("p_partkey"))
         .select(col("p_partkey"), col("p_type"),
           regexp_extract(col("p_type"), "^(\\w+) (\\w+)", 1).as("type_word1"),
           regexp_extract(col("p_type"), "^(\\w+) (\\w+)", 2).as("type_word2"))
@@ -100,7 +100,7 @@ object FnOps {
           concat(lit("req_id="), col("event_id").cast("string")),
           concat(lit("took="), (col("event_id") % 100).cast("string"),
             lit("."), (col("user_id") % 10).cast("string")))
-        T(s, d, "events").withColumn("msg", msg)
+        T.byOrder(T(s, d, "events"), col("event_id")).withColumn("msg", msg)
           .select(col("event_id") +:
             Grok.columnsOnePass(s)(col("msg"), GrokLogLine): _*)
           .orderBy(col("event_id"))
@@ -157,7 +157,9 @@ object FnOps {
         // capture-array evaluations, all of which codegen subexpression
         // elimination ran eagerly per row. Same fmt/caps semantics
         // (GrokSpec parity pin); oracle unchanged.
-        T(s, d, "events").withColumn("msg", msg)
+        // Spread in event_id order (T.byOrder): grok runs on every core, and
+        // the final ORDER BY's range sampler reads the scan, not the grok.
+        T.byOrder(T(s, d, "events"), col("event_id")).withColumn("msg", msg)
           .withColumn("dx", Grok.dispatchStruct(s)(col("msg"), GrokFormats))
           .withColumn("format_id", col("dx.fmt"))
           .select(col("event_id") +: col("format_id") +:

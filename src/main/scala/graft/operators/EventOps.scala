@@ -27,7 +27,7 @@ object EventOps {
     * valid_to_us, n_events) shared by `evt_scd2_state` (full history) and
     * `stream_scd2` (closed intervals — the streaming twin's emission). */
   private def scd2Intervals(s: SparkSession, d: String): DataFrame = {
-    val islands = T(s, d, "events")
+    val islands = T.byKey(T(s, d, "events"), col("user_id"))
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("prev", lag(col("event_type"), 1).over(arrivalW))
       .withColumn("chg",
@@ -44,9 +44,11 @@ object EventOps {
       lead(col("valid_from_us"), 1).over(byVersion))
   }
 
-  /** Per-user sessionization: lag-gap flag → running sum = session seq. */
+  /** Per-user sessionization: lag-gap flag → running sum = session seq.
+    * Spread on user_id ([[T.byKey]]), so every per-user and per-session
+    * stage above it runs on every core. */
   def sessionized(s: SparkSession, d: String): DataFrame =
-    T(s, d, "events")
+    T.byKey(T(s, d, "events"), col("user_id"))
       .withColumn("prev_ts", lag(col("ts"), 1).over(arrivalW))
       .withColumn("new_session",
         when(col("prev_ts").isNull ||

@@ -14,6 +14,16 @@ import graft.Dsl._
   */
 object RelationalOps {
 
+  /** A user's forward as-of frame `[current, +∞)` in (ts, event_id) order,
+    * run as the running frame of the reverse order: `(ts, event_id)` is
+    * unique per user, so both frames hold the same rows, and `first` over
+    * the forward frame is `last` over this one. Spark re-aggregates an
+    * unbounded-following frame for every row (O(n²) per user); a running
+    * frame is one pass. */
+  private val forwardW = org.apache.spark.sql.expressions.Window
+    .partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
+    .rowsBetween(Long.MinValue, 0)
+
   val defs: Seq[(String, Q)] = Seq(
 
     // ---- §2.A scans --------------------------------------------------
@@ -760,16 +770,14 @@ object RelationalOps {
     // Same single per-user window pass, same scale shape: one shuffle on
     // user_id, frames bounded by the per-user stream. DuckDB's native
     // ASOF JOIN is backward-only, so BOTH engines run the window
-    // formulation (the join_asof precedent).
+    // formulation (the join_asof precedent). Spark runs the forward frame
+    // as its running mirror (see [[forwardW]]).
     "join_asof_forward" -> Q(
       (s, d) => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-          .rowsBetween(0, Long.MaxValue)
-        T(s, d, "events")
+        T.byKey(T(s, d, "events"), col("user_id"))
           .withColumn("next_error_value",
-            first(when(col("event_type") === "error", col("value")),
-              ignoreNulls = true).over(w))
+            last(when(col("event_type") === "error", col("value")),
+              ignoreNulls = true).over(forwardW))
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("next_error_value"))
           .orderBy(col("event_id"))
@@ -791,10 +799,7 @@ object RelationalOps {
         val wb = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
           .rowsBetween(Long.MinValue, 0)
-        val wf = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-          .rowsBetween(0, Long.MaxValue)
-        T(s, d, "events")
+        T.byKey(T(s, d, "events"), col("user_id"))
           .withColumn("le_val",
             last(when(col("event_type") === "error", col("value")),
               ignoreNulls = true).over(wb))
@@ -802,11 +807,11 @@ object RelationalOps {
             max(when(col("event_type") === "error", unix_micros(col("ts"))))
               .over(wb))
           .withColumn("ne_val",
-            first(when(col("event_type") === "error", col("value")),
-              ignoreNulls = true).over(wf))
+            last(when(col("event_type") === "error", col("value")),
+              ignoreNulls = true).over(forwardW))
           .withColumn("ne_us",
             min(when(col("event_type") === "error", unix_micros(col("ts"))))
-              .over(wf))
+              .over(forwardW))
           .select(col("event_id"), col("user_id"), col("event_type"),
             when(col("le_us").isNull, col("ne_val"))
               .when(col("ne_us").isNull, col("le_val"))

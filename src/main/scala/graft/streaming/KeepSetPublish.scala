@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Exactly-once snapshot publishing for the dedup KEEP-SET — the missing
   * write-back half of `llm_dedup_incremental` (which only READS an
@@ -18,6 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     `_tmp_epoch_<id>` directory;
   *  2. the temp dir is renamed to `epoch=<id>/` (one atomic directory
   *     move on POSIX) and the `epoch_<id>.commit` marker is dropped LAST.
+  *     The marker holds the snapshot's schema (Spark's JSON form), so a
+  *     read runs no parquet schema-inference job.
   *
   * A replay finds the marker and returns without running ANY job; a
   * crashed attempt leaves an unmarked dir that readers never trust and
@@ -56,8 +59,25 @@ object KeepSetPublish {
     // GateSink.commit argument, verbatim).
     deleteRecursively(epochDir)
     Files.move(tmp.toPath, epochDir.toPath, StandardCopyOption.ATOMIC_MOVE)
-    Files.write(marker.toPath, "committed\n".getBytes(StandardCharsets.UTF_8))
+    Files.write(marker.toPath, df.schema.json.getBytes(StandardCharsets.UTF_8))
     true
+  }
+
+  /** The schema epoch `epochId` was published with, from its marker.
+    * Fails loudly on an uncommitted epoch (an unmarked dir is a crashed
+    * attempt, never data) and on a marker that holds no schema. */
+  private def epochSchema(dir: String, epochId: Long): StructType = {
+    val marker = new File(dir, s"epoch_$epochId.commit")
+    require(marker.exists(),
+      s"KeepSetPublish: epoch $epochId not committed under $dir")
+    val text = new String(Files.readAllBytes(marker.toPath), StandardCharsets.UTF_8)
+    scala.util.Try(DataType.fromJson(text)).toOption match {
+      case Some(st: StructType) => st
+      case _ => throw new IllegalStateException(
+        s"KeepSetPublish: marker $marker holds no schema (a marker written " +
+          "before markers carried the snapshot schema) — write the epoch " +
+          "directory's schema JSON into it, or publish to a new dir")
+    }
   }
 
   /** All committed epoch ids under `dir`, ascending — committed means the
@@ -81,7 +101,7 @@ object KeepSetPublish {
   def readLatest(spark: SparkSession, dir: String): DataFrame = {
     val epoch = latestEpoch(dir).getOrElse(throw new IllegalStateException(
       s"KeepSetPublish.readLatest: no committed epoch under $dir"))
-    spark.read.parquet(Paths.get(dir, s"epoch=$epoch").toString)
+    readEpoch(spark, dir, epoch)
   }
 
   /** TIME TRAVEL (round-12): reads a SPECIFIC committed epoch — the AS OF
@@ -91,11 +111,9 @@ object KeepSetPublish {
     * and are isolated from concurrent upserts for free. Fails loudly on
     * an uncommitted epoch (an unmarked dir is a crashed attempt, never
     * data). */
-  def readEpoch(spark: SparkSession, dir: String, epochId: Long): DataFrame = {
-    require(new File(dir, s"epoch_$epochId.commit").exists(),
-      s"KeepSetPublish.readEpoch: epoch $epochId not committed under $dir")
-    spark.read.parquet(Paths.get(dir, s"epoch=$epochId").toString)
-  }
+  def readEpoch(spark: SparkSession, dir: String, epochId: Long): DataFrame =
+    spark.read.schema(epochSchema(dir, epochId))
+      .parquet(Paths.get(dir, s"epoch=$epochId").toString)
 
   /** RETENTION GC (round-12) — the expire_snapshots maintenance every
     * versioned lake runs, on the same marker protocol: every committed

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** Keyed-UPSERT external-sink analogue [PK: the reference ships its events
   * to Elasticsearch/InfluxDB, where the document `_id` (ES) / series key
@@ -42,11 +43,22 @@ object UpsertSink {
     // Replay guard on the MARKER, not just the latest epoch: a replayed
     // batch 1 while epoch 2 exists must no-op too (monotone batch ids are
     // the streaming contract, so any committed epoch >= batchId means this
-    // batch's effects are already folded into the live state).
-    if (KeepSetPublish.latestEpoch(dir).exists(_ >= batchId)) return false
+    // batch's effects are already folded into the live state). One
+    // listing serves the guard and the read.
+    val latest = KeepSetPublish.latestEpoch(dir)
+    if (latest.exists(_ >= batchId)) return false
     val spark = batch.sparkSession
-    val prev: DataFrame = KeepSetPublish.latestEpoch(dir) match {
-      case Some(e) => KeepSetPublish.readEpoch(spark, dir, e)
+    val prev: DataFrame = latest match {
+      case Some(e) =>
+        val stored = KeepSetPublish.readEpoch(spark, dir, e)
+        // a changed batch schema would silently widen types or fail deep
+        // in the union; a missing column must never read back as nulls
+        if (columns(stored.schema) != columns(batch.schema))
+          throw new IllegalStateException(
+            s"UpsertSink: batch $batchId schema ${batch.schema.simpleString} " +
+              s"differs from the stored schema ${stored.schema.simpleString} " +
+              s"of epoch $e under $dir")
+        stored
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], batch.schema)
     }
@@ -62,6 +74,19 @@ object UpsertSink {
       .filter(col("_rn") === 1)
       .drop("_src", "_rn")
     KeepSetPublish.publish(merged, dir, batchId)
+  }
+
+  /** Column name → type, nullability aside (parquet reads every column
+    * back nullable). */
+  private def columns(s: StructType): Map[String, DataType] = {
+    def nullable(t: DataType): DataType = t match {
+      case st: StructType => StructType(st.fields.map(f =>
+        StructField(f.name, nullable(f.dataType))))
+      case a: ArrayType => ArrayType(nullable(a.elementType))
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType))
+      case other => other
+    }
+    s.fields.map(f => f.name -> nullable(f.dataType)).toMap
   }
 
   /** Structured Streaming wiring: `writeStream` → foreachBatch upsert.

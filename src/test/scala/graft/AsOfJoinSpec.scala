@@ -82,6 +82,65 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
+  /** One generated event: (event_id, µs ts, user, is_error, value). */
+  private type Ev = (Long, Long, Long, Boolean, Option[Double])
+
+  /** Exhaustive as-of reference over one user's events: for event `e`,
+    * the errors at-or-before / at-or-after it in (ts, event_id) order.
+    * A value is carried from the nearest error whose value is not null
+    * (the IGNORE NULLS frames); a distance is measured to the nearest
+    * error of any value (the min/max µs frames). */
+  private def reference(evs: Seq[Ev]): Map[Long, (Option[Double], Option[Double])] = {
+    import scala.math.Ordering.Implicits._
+    evs.groupBy(_._3).values.flatMap { user =>
+      val errs = user.filter(_._4).sortBy(e => (e._2, e._1))
+      user.map { case (id, ts, _, _, _) =>
+        val before = errs.filter(x => (x._2, x._1) <= ((ts, id)))
+        val after = errs.filter(x => (x._2, x._1) >= ((ts, id)))
+        val leVal = before.reverse.flatMap(_._5).headOption
+        val neVal = after.flatMap(_._5).headOption
+        val nearest = (before.lastOption.map(_._2), after.headOption.map(_._2)) match {
+          case (None, _) => neVal
+          case (_, None) => leVal
+          case (Some(le), Some(ne)) => if (ts - le <= ne - ts) leVal else neVal
+        }
+        id -> (neVal, nearest)
+      }
+    }.toMap
+  }
+
+  test("randomized parity: join_asof_forward / join_asof_nearest vs an exhaustive reference") {
+    var nullErrors, tiedTs = 0
+    (1 to 12).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val n = 150 + rnd.nextInt(200)
+      val users = 2 + rnd.nextInt(8)
+      // the last user never errs; ts in a narrow range ⇒ frequent ties
+      val evs: Seq[Ev] = (0 until n).map { i =>
+        val u = rnd.nextInt(users).toLong
+        val err = u != users - 1 && rnd.nextInt(4) == 0
+        val v = if (err && rnd.nextInt(4) == 0) None else Some(rnd.nextInt(10000) / 100.0)
+        (i.toLong, 1700000000000000L + rnd.nextInt(60) * 1000000L, u, err, v)
+      }
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_asof_$seed").toString
+      evs.map { case (id, ts, u, err, v) =>
+        (id, new java.sql.Timestamp(ts / 1000), u, if (err) "error" else "click", v)
+      }.toDF("event_id", "ts", "user_id", "event_type", "value")
+        .write.parquet(s"$dir/events.parquet")
+      val want = reference(evs)
+      def got(key: String, c: String) = SparkEntry.queries(key)(spark, dir)
+        .select($"event_id", col(c)).collect()
+        .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+      assert(got("join_asof_forward", "next_error_value") == want.view.mapValues(_._1).toMap,
+        s"forward, seed=$seed")
+      assert(got("join_asof_nearest", "nearest_error_value") == want.view.mapValues(_._2).toMap,
+        s"nearest, seed=$seed")
+      nullErrors += evs.count(e => e._4 && e._5.isEmpty)
+      tiedTs += evs.size - evs.map(e => (e._3, e._2)).distinct.size
+    }
+    assert(nullErrors > 0 && tiedTs > 0, "the generator must cover null values and tied ts")
+  }
+
   test("type validation: non-integral key rejected, integer key widened") {
     val l = Seq((1, 10L, 1L, "a")).toDF("k", "ts", "tie", "payload")
     val r = Seq((1, 5L, 1L, 9.9)).toDF("rk", "rts", "rtie", "rv")

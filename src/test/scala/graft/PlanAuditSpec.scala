@@ -224,6 +224,47 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.plan.audit")
   }
 
+  /** Exchanges (PlanDump's count: the final plan plus every pinned
+    * segment) of each key that `T.byKey` / `T.byOrder` spread, as the
+    * plans stood before the spreads, at sf0.01. The spread's exchange must
+    * replace the one the chain's first window, aggregate or sort needed. */
+  private val spreadExchanges: Map[String, Int] = Map(
+    "evt_pattern_count" -> 2, "evt_pattern_match" -> 3, "evt_pattern_measures" -> 2,
+    "evt_pattern_nonoverlap" -> 2, "evt_pattern_permute" -> 2,
+    "evt_pattern_quantified" -> 2, "evt_pattern_within" -> 2, "evt_scd2_state" -> 2,
+    "evt_session_basket" -> 14, "evt_session_entry_exit" -> 2,
+    "evt_sessionize_batch" -> 2, "evt_top_paths" -> 2, "evt_top_sessions" -> 4,
+    "flow_compiled_measures" -> 2, "fn_grok_dispatch" -> 1, "fn_grok_extract" -> 1,
+    "fn_grok_patterns" -> 1, "join_asof_forward" -> 2, "join_asof_nearest" -> 2,
+    "join_scd2_pointintime" -> 3, "scale_interval_bin_join" -> 5, "stream_scd2" -> 2,
+    "stream_session_window" -> 2)
+
+  test("spread keys plan no more exchanges than before the spreads (sf0.01)") {
+    spark.conf.set("spark.graft.plan.audit", "true")
+    try {
+      graft.operators.Scale.drainAuditPlans(): Unit
+      val risen = spreadExchanges.toSeq.sorted.flatMap { case (key, before) =>
+        val plan = SparkEntry.queries(key)(spark, sf01).queryExecution.executedPlan
+        val now = (plan +: graft.operators.Scale.drainAuditPlans()).map(PlanDump.exchanges).sum
+        graft.operators.Scale.releasePins(spark)
+        if (now > before) Some(s"$key: $before -> $now") else None
+      }
+      assert(risen.isEmpty, risen.mkString("\n"))
+    } finally spark.conf.unset("spark.graft.plan.audit")
+  }
+
+  test("a spread chain's heaviest stage runs one task per shuffle partition (sf0.01)") {
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    Seq("evt_pattern_match", "join_asof_nearest", "fn_grok_dispatch").foreach { key =>
+      def run() = SparkEntry.queries(key)(spark, sf01)
+        .write.format("noop").mode("overwrite").save()
+      run() // warm: the JIT, not the plan, would pick the cold heaviest stage
+      val (_, rec) = Jobs.record(spark)(run())
+      val heavy = rec.stages.maxBy(_.runMs)
+      assert(heavy.tasks == parts, s"$key: heaviest stage $heavy of ${rec.stages}")
+    }
+  }
+
   test("PlanDump counts exchange nodes of the pre-execution plan") {
     import org.apache.spark.sql.functions.{broadcast, col}
     val agg = spark.range(0, 1000).withColumn("k", col("id") % 10)

@@ -77,6 +77,46 @@ class UpsertSinkSpec extends SparkSpec {
     assert(UpsertSink.committedEpochs(dir) == Seq(0L, 1L))
   }
 
+  test("epochs read back with the marker's schema: no inference job") {
+    val dir = tmpDir("upsert_schema")
+    assert(UpsertSink.applyBatch(dir, 0L,
+      Seq((1L, 1L, "a")).toDF("k", "v", "payload"), Seq("k"), Seq("v")))
+    val (df, rec) = Jobs.record(spark)(UpsertSink.readState(spark, dir))
+    assert(rec.jobs == 0, s"reading an epoch ran ${rec.jobs} job(s)")
+    assert(df.columns.toSeq == Seq("k", "v", "payload"))
+  }
+
+  test("a batch whose schema differs from the stored one fails loudly, naming both") {
+    val dir = tmpDir("upsert_schema_drift")
+    assert(UpsertSink.applyBatch(dir, 0L,
+      Seq((1L, 1L, "a")).toDF("k", "v", "payload"), Seq("k"), Seq("v")))
+    val drifted = Seq(
+      Seq((2L, 2L)).toDF("k", "v"), // a stored column is missing
+      Seq((2L, 2L, "b", 1)).toDF("k", "v", "payload", "extra"),
+      Seq((2L, 2, "b")).toDF("k", "v", "payload")) // v: bigint → int
+    drifted.foreach { b =>
+      val ex = intercept[IllegalStateException](
+        UpsertSink.applyBatch(dir, 1L, b, Seq("k"), Seq("v")))
+      assert(ex.getMessage.contains(b.schema.simpleString) &&
+        ex.getMessage.contains("struct<k:bigint,v:bigint,payload:string>"), ex.getMessage)
+    }
+    assert(UpsertSink.committedEpochs(dir) == Seq(0L))
+    // the same columns in another order are the same schema
+    assert(UpsertSink.applyBatch(dir, 1L,
+      Seq(("c", 3L, 3L)).toDF("payload", "v", "k"), Seq("k"), Seq("v")))
+    assert(state(dir) == Seq((1L, 1L, "a"), (3L, 3L, "c")))
+  }
+
+  test("a marker without a schema does not load") {
+    val dir = tmpDir("upsert_old_marker")
+    assert(UpsertSink.applyBatch(dir, 0L,
+      Seq((1L, 1L, "a")).toDF("k", "v", "payload"), Seq("k"), Seq("v")))
+    Files.write(new File(dir, "epoch_0.commit").toPath,
+      "committed\n".getBytes(StandardCharsets.UTF_8))
+    val ex = intercept[IllegalStateException](UpsertSink.readState(spark, dir))
+    assert(ex.getMessage.contains("holds no schema"), ex.getMessage)
+  }
+
   test("crashed unmarked epoch is invisible; the retry commits exactly once") {
     val dir = tmpDir("upsert_crash")
     assert(UpsertSink.applyBatch(dir, 0L,
