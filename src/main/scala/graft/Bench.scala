@@ -32,6 +32,14 @@ object Bench {
         .find(!exists(_)).get
     }
 
+  /** The final stdout line: the run in a few hundred bytes, so a capture
+    * that keeps only the last ~2 KB of stdout still parses it even when
+    * the per-key line above it is cut. `artifact` is the file name of the
+    * full per-key JSON. */
+  private[graft] def summaryLine(total: Double, n: Int, failed: Int,
+      snapshotBacked: Int, artifact: String): String =
+    s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","n":$n,"failed":$failed,"snapshot_backed_n":$snapshotBacked,"artifact":${Verify.jsonString(artifact)}}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session()
@@ -52,8 +60,8 @@ object Bench {
     //
     // Each query runs `reps` times and reports the MEDIAN: a co-tenant load
     // spike during one rep can no longer inflate that key (or the total,
-    // which is the sum of medians). One-time scratch writes (ScaleOps
-    // memoized tables) land in rep 1 and drop out of the median.
+    // which is the sum of medians). Every rep starts from an empty scratch,
+    // so each one pays its own layout writes and publishes.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // Local-iteration filter (driver sets no filter → full run): comma list
     // of keys to time in isolation. Unknown keys fail loudly, like Verify.
@@ -70,6 +78,7 @@ object Bench {
       graft.operators.Scale.drainSnapshotReads(): Unit
       var snapshotServed = false
       val times = (1 to reps).map { _ =>
+        graft.operators.Scale.resetScratch()
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -79,10 +88,8 @@ object Bench {
         val dt = (System.nanoTime() - t0) / 1e9
         // snapshot labeling (r17 verdict #2): a rep that READ a committed
         // snapshot (marker hit, zero compute) timed read-back, not the
-        // derivation — the artifact records the key so exponent readers
-        // know. Rep 1 of a cold run publishes (flag stays false there);
-        // any later rep flips it, which is exactly when the MEDIAN stops
-        // measuring compute.
+        // derivation — the artifact records the key. With the scratch
+        // reset above no rep should, so a key listed here is a defect.
         snapshotServed |= graft.operators.Scale.drainSnapshotReads()
         // pin lifecycle (r13 verdict #2): release the rep's pinned scratch
         // blocks as soon as its clock stops — without this a full-session
@@ -140,6 +147,8 @@ object Bench {
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }
+    println(summaryLine(total, results.size, results.count(!_._3),
+      results.count(_._4), java.nio.file.Paths.get(out).getFileName.toString))
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft.flow
 
+import java.nio.file.{FileSystemAlreadyExistsException, FileSystems, Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Named-flow registry — the reference's management path [PK: eventstreams
   * named flows; Logstash pipelines.yml]: flow specs live as `<name>.json`
@@ -9,23 +11,44 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * edit lands on the next invocation, no daemon to signal), so operating a
   * deployed flow is editing a JSON file, never a code change.
   *
-  * The directory defaults to `conf/flows` under the process CWD and is
-  * overridable per session via `spark.graft.flow.dir` — tests point it at
-  * scratch dirs; a cluster deployment points it at shared storage the
-  * driver can read (specs are driver-side plan construction only, so the
-  * executors never need the registry).
+  * The directory is `spark.graft.flow.dir` when the session sets it —
+  * tests point it at scratch dirs; a cluster deployment points it at
+  * shared storage the driver can read (specs are driver-side plan
+  * construction only, so the executors never need the registry). Unset,
+  * it is the `flows/` directory the build puts on the classpath (sbt
+  * copies the repository's `conf/flows` there), so the process's working
+  * directory never matters; hot-editing specs needs the conf, since the
+  * shipped copy changes only with a rebuild.
   */
 object FlowRegistry {
 
-  def registryDir(s: SparkSession): String =
-    s.conf.getOption("spark.graft.flow.dir").getOrElse("conf/flows")
+  def registryDir(s: SparkSession): Path =
+    s.conf.getOption("spark.graft.flow.dir").map(Paths.get(_))
+      .getOrElse(shipped)
+
+  /** The shipped `flows/`: a plain directory on a class-directory
+    * classpath, a path in the jar's file system when the classes are
+    * packaged (as `sbt run` does). */
+  private def shipped: Path = {
+    val uri = Option(getClass.getResource("/flows")).getOrElse(sys.error(
+      "flow registry: no flows/ on the classpath and spark.graft.flow.dir " +
+        "is unset")).toURI
+    if (uri.getScheme == "jar")
+      try FileSystems.newFileSystem(uri, java.util.Collections.emptyMap[String, Any]())
+      catch { case _: FileSystemAlreadyExistsException => () }
+    Paths.get(uri)
+  }
 
   /** Flow names available right now (sorted, for stable error text). */
   def available(s: SparkSession): Seq[String] = {
-    val d = new java.io.File(registryDir(s))
-    Option(d.listFiles()).toSeq.flatten
-      .filter(f => f.isFile && f.getName.endsWith(".json"))
-      .map(_.getName.stripSuffix(".json")).sorted.toSeq
+    val d = registryDir(s)
+    if (!Files.isDirectory(d)) Nil
+    else {
+      val ls = Files.list(d)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".json")).map(_.stripSuffix(".json")).toSeq.sorted
+      finally ls.close()
+    }
   }
 
   /** Read a named spec, failing loudly — an unknown name must list what IS
@@ -33,12 +56,12 @@ object FlowRegistry {
   def load(s: SparkSession, name: String): String = {
     require(name.matches("[A-Za-z0-9_-]+"),
       s"flow registry: name must be [A-Za-z0-9_-]+, got '$name'")
-    val f = new java.io.File(registryDir(s), s"$name.json")
-    if (!f.isFile)
+    val f = registryDir(s).resolve(s"$name.json")
+    if (!Files.isRegularFile(f))
       sys.error(s"flow registry: no flow named '$name' in " +
         s"${registryDir(s)} — available: " +
         (if (available(s).isEmpty) "(none)" else available(s).mkString(", ")))
-    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    new String(Files.readAllBytes(f), "UTF-8")
   }
 
   /** Run a named single-output flow against the sf-dir tables. */

@@ -337,8 +337,8 @@ object DedupOps {
     bandsOfSigs(md5Sigs(docs))
 
   /** Band derivation alone (sig0..sig7 → 4×(band, bkey) rows): cheap
-    * projection + explode, factored out so both the from-scratch path and
-    * the snapshot-backed path share one banding rule. */
+    * projection + explode, factored out so a key that also reads the
+    * signatures derives its bands from the same frame. */
   private def bandsOfSigs(signed: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val bandCol = explode(array((0 until 4).map { b =>
@@ -348,29 +348,6 @@ object DedupOps {
     signed.select(col("doc_id"), bandCol)
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
   }
-
-  /** [[md5Sigs]] over the FULL documents table behind a committed snapshot
-    * (Scale.snapshotOnce — the cluster_assign discipline, r13 verdict #3):
-    * five keys (`llm_minhash_md5`, `llm_dedup_incremental`,
-    * `llm_keepset_upsert`, `stream_near_dedup`, `llm_minhash_jaccard_est`)
-    * compose the same shingle→8×md5 signature stage, and at 100 TB the
-    * signer pass is the dominant cost — a production pipeline derives the
-    * signature table once per corpus generation and every consumer reads
-    * the committed parquet. First caller per corpus in an application
-    * pays the compute-and-publish; sibling keys and bench reps are
-    * parquet reads (no job, no executor-storage pins). */
-  def md5SigsShared(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    Scale.snapshotOnce(s, "md5_sigs", d)(md5Sigs(T(s, d, "documents")))
-
-  /** [[md5Bands]] over the full documents table, derived from the
-    * [[md5SigsShared]] snapshot: the band explode is a cheap per-row
-    * projection over the committed signature parquet, so consumers that
-    * use the band frame on both sides of a self-join re-scan a small
-    * columnar file instead of re-running (or pinning) the signer. */
-  def md5BandsShared(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    bandsOfSigs(md5SigsShared(s, d))
 
   /** Shared md5-based 60-bit SimHash signature frame for
     * `llm_simhash_md5` / `llm_simhash_hamming_join`: per-token hash is
@@ -1157,8 +1134,8 @@ object DedupOps {
   /** Shared Spark-side body of the cluster keys: every document joined to
     * its jaccard≥0.5 component label (singletons label themselves). ONE
     * definition so the threshold and labeling rules cannot drift between
-    * `llm_dedup_clusters` and `llm_dedup_keep` (their oracles already
-    * share [[clustersWalkCte]]). */
+    * `llm_dedup_clusters`, `llm_dedup_keep` and `llm_corpus_select`
+    * (their oracles already share [[clustersWalkCte]]). */
   private def clusterAssignments(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val pairs = jaccardScored(s, d).filter(col("jaccard") >= 0.5)
@@ -1168,18 +1145,6 @@ object DedupOps {
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("cluster_id"))
   }
-
-  /** The cluster keys' ACTUAL entry point: [[clusterAssignments]] behind a
-    * committed snapshot (Scale.snapshotOnce / KeepSetPublish marker-last
-    * epochs). A real pipeline derives the assignment table ONCE per corpus
-    * generation and every downstream consumer (cluster listing, keep-list,
-    * final selection) reads the committed snapshot — three keys composing
-    * one CC run is the deployment shape, not three CC runs. First caller
-    * per corpus in an application pays the iterate-and-publish; later
-    * reps and sibling keys are parquet reads. */
-  private def clusterAssignmentsShared(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    Scale.snapshotOnce(s, "cluster_assign", d)(clusterAssignments(s, d))
 
   val defs: Seq[(String, Q)] = Seq(
 
@@ -1375,13 +1340,13 @@ object DedupOps {
     "llm_minhash_jaccard_est" -> Q(
       (s, d) => {
         val docs = T(s, d, "documents")
-        val bands = md5BandsShared(s, d)
+        val sigs = md5Sigs(docs)
+        val bands = bandsOfSigs(sigs)
         val cand = bands.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
           .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("bkey")),
             Seq("band", "bkey"))
           .filter(col("doc_a") < col("doc_b"))
           .select(col("doc_a"), col("doc_b")).distinct()
-        val sigs = md5SigsShared(s, d)
         val sa = sigs.select(col("doc_id").as("doc_a") +:
           (0 until 8).map(k => col(s"sig$k").as(s"a$k")): _*)
         val sb = sigs.select(col("doc_id").as("doc_b") +:
@@ -1779,7 +1744,7 @@ object DedupOps {
     // incremental and streaming-twin keys).
     "llm_minhash_md5" -> Q(
       (s, d) => {
-        val bands = md5BandsShared(s, d)
+        val bands = md5Bands(T(s, d, "documents"))
         bands.withColumnRenamed("doc_id", "doc_a")
           .join(bands.withColumnRenamed("doc_id", "doc_b"), Seq("band", "bkey"))
           .filter(col("doc_a") < col("doc_b"))
@@ -1802,10 +1767,7 @@ object DedupOps {
     // by definition (nothing to collide on).
     "llm_dedup_incremental" -> Q(
       (s, d) => {
-        // snapshot-backed (not .pinned): both plan branches re-scan the
-        // committed signature parquet — no executor-storage pin to leak
-        // across a long session (the r13 driver-bench spike cause)
-        val bands = md5BandsShared(s, d)
+        val bands = md5Bands(T(s, d, "documents"))
         val keepBands = bands.filter(col("doc_id") % 10 < 8)
           .select(col("band"), col("bkey")).distinct()
         val dupIds = bands.filter(col("doc_id") % 10 >= 8)
@@ -1836,12 +1798,11 @@ object DedupOps {
     "llm_keepset_upsert" -> Q(
       (s, d) => {
         val dir = Scale.scratchDir("keepset", d)
-        // Replay short-circuit BEFORE any frame is built: a replay must
-        // not re-touch even the signature snapshot, so a published
+        // Replay short-circuit BEFORE any frame is built: a published
         // epoch 1 makes the whole upsert a pure snapshot read (what a
         // rerun daily job does).
         Scale.writeOnce(dir) {
-          val bands = md5BandsShared(s, d)
+          val bands = md5Bands(T(s, d, "documents"))
           val keepBands = bands.filter(col("doc_id") % 10 < 8)
             .select(col("band"), col("bkey")).distinct()
           val dupIds = bands.filter(col("doc_id") % 10 >= 8)
@@ -1877,7 +1838,7 @@ object DedupOps {
     // stream ≡ batch, including out-of-order delivery within the
     // watermark. The window is PARTITIONed by bucket — no global sort.
     "stream_near_dedup" -> Q(
-      (s, d) => md5BandsShared(s, d)
+      (s, d) => md5Bands(T(s, d, "documents"))
         .withColumn("leader", min(col("doc_id")).over(
           Window.partitionBy(col("band"), col("bkey"))))
         .filter(col("doc_id") =!= col("leader"))
@@ -1901,7 +1862,7 @@ object DedupOps {
     // iterating over the candidate subgraph and re-shuffling the whole
     // corpus every round. Oracle: DuckDB recursive CTE reachability.
     "llm_dedup_clusters" -> Q(
-      (s, d) => clusterAssignmentsShared(s, d).orderBy(col("doc_id")),
+      (s, d) => clusterAssignments(s, d).orderBy(col("doc_id")),
       clustersWalkCte +
         "SELECT doc_id, min(label) AS cluster_id FROM walk GROUP BY doc_id " +
         "ORDER BY doc_id"),
@@ -1911,7 +1872,7 @@ object DedupOps {
     // a pipeline filters keep=true and discards the rest. Same CC
     // machinery and recursive-CTE oracle as llm_dedup_clusters.
     "llm_dedup_keep" -> Q(
-      (s, d) => clusterAssignmentsShared(s, d)
+      (s, d) => clusterAssignments(s, d)
         .withColumn("keep", col("cluster_id") === col("doc_id"))
         .orderBy(col("doc_id")),
       clustersWalkCte +
@@ -1928,7 +1889,7 @@ object DedupOps {
     // oracle reuses both stages' SQL verbatim, so the composite sits under
     // exactly the same correctness gate as its parts.
     "llm_corpus_select" -> Q(
-      (s, d) => clusterAssignmentsShared(s, d)
+      (s, d) => clusterAssignments(s, d)
         .withColumn("dedup_keep", col("cluster_id") === col("doc_id"))
         .join(TextOps.gopherFlags(s, d)
           .select(col("doc_id"), col("keep").as("quality_ok")), Seq("doc_id"))
@@ -2046,8 +2007,7 @@ object DedupOps {
     // left to the caller). Edges carry ids only, CC is the O(log n) star
     // algorithm.
     "llm_semantic_dedup_keep" -> Q(
-      (s, d) => Scale.snapshotOnce(s, "semantic_keep", d)(
-        semanticKeep(T(s, d, "embeddings"))).orderBy(col("vec_id")),
+      (s, d) => semanticKeep(T(s, d, "embeddings")).orderBy(col("vec_id")),
       ivfAutoCandCte(recursive = true) +
         semanticKeepSqlTail),
 
@@ -2066,8 +2026,7 @@ object DedupOps {
     // the identical two-level chain (same ceil scalars, same tie-breaks,
     // same keyed join).
     "llm_semantic_dedup_cellsized" -> Q(
-      (s, d) => Scale.snapshotOnce(s, "semantic_keep_c64", d)(
-        semanticKeep(T(s, d, "embeddings"), IvfSpec.CellSized))
+      (s, d) => semanticKeep(T(s, d, "embeddings"), IvfSpec.CellSized)
         .orderBy(col("vec_id")),
       ivf2CandCte(recursive = true) + semanticKeepSqlTail),
 
@@ -2075,17 +2034,15 @@ object DedupOps {
     // — the purity number a dedup owner checks before trusting "keep one
     // per cluster": each cluster scored against the fixture's ground-
     // truth labels (majority label share, the standard external
-    // clustering metric). Reuses the SAME committed semantic_keep
-    // snapshot as llm_semantic_dedup_keep (no recompute — the cluster
-    // family discipline); one keyed join to labels + two hash
+    // clustering metric). Builds the SAME semanticKeep chain as
+    // llm_semantic_dedup_keep, then one keyed join to labels + two hash
     // aggregates, cluster-sized output. Majority tie-breaks (count desc,
     // label asc) and purity in exact integer micro-units — bit-identical
     // cross-engine; the oracle replays the components with the same
     // recursive walk the dedup key proved.
     "llm_cluster_purity" -> Q(
       (s, d) => {
-        val cl = Scale.snapshotOnce(s, "semantic_keep", d)(
-          semanticKeep(T(s, d, "embeddings")))
+        val cl = semanticKeep(T(s, d, "embeddings"))
           .select(col("vec_id"), col("cluster_id"))
         val lb = T(s, d, "embeddings")
           .select(col("vec_id"), big(col("label")).as("glabel"))

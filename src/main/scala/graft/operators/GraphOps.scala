@@ -76,57 +76,46 @@ object GraphOps {
       "FROM c2 a JOIN c2 b ON a.hb = b.hb AND a.event_type = b.event_type " +
       "AND a.user_id < b.user_id)"
 
-  /** Undirected co-occurrence edges (src < dst), hot-cell-capped. Every
-    * raw-graph key consumes this frame, so it is computed ONCE per (input
-    * dir, application) as a committed snapshot (the cluster-family
-    * discipline, Scale.snapshotOnce): the first key to run pays the
-    * distinct + capped self-join; every later key reads the committed
-    * parquet back. */
-  private def edges(s: SparkSession, d: String): DataFrame =
-    Scale.snapshotOnce(s, "graph_cooccur", d) {
-      val c = cells(s, d)
-      val ok = c.groupBy(col("hb"), col("event_type"))
-        .agg(count(lit(1)).as("cell_n"))
-        .filter(col("cell_n") <= MaxCellUsers)
-        .select(col("hb"), col("event_type"))
-      val c2 = c.join(ok, Seq("hb", "event_type"))
-      val a = c2.select(col("hb"), col("event_type"), col("user_id").as("src"))
-      val b = c2.select(col("hb"), col("event_type"), col("user_id").as("dst"))
-      a.join(b, Seq("hb", "event_type"))
-        .filter(col("src") < col("dst"))
-        .select(col("src"), col("dst")).distinct()
-    }
-
-  /** Both directions, for traversal keys — two scans of the snapshot. */
-  private def symEdges(s: SparkSession, d: String): DataFrame = {
-    val e = edges(s, d)
-    e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+  /** User pairs (src < dst) sharing a presence cell of at most
+    * [[MaxCellUsers]] users, one row per shared cell: the capped self-join
+    * under both edge frames. */
+  private def cellPairs(s: SparkSession, d: String): DataFrame = {
+    val c = cells(s, d)
+    val ok = c.groupBy(col("hb"), col("event_type"))
+      .agg(count(lit(1)).as("cell_n"))
+      .filter(col("cell_n") <= MaxCellUsers)
+      .select(col("hb"), col("event_type"))
+    val c2 = c.join(ok, Seq("hb", "event_type"))
+    val a = c2.select(col("hb"), col("event_type"), col("user_id").as("src"))
+    val b = c2.select(col("hb"), col("event_type"), col("user_id").as("dst"))
+    a.join(b, Seq("hb", "event_type")).filter(col("src") < col("dst"))
   }
+
+  /** Undirected co-occurrence edges (src < dst), hot-cell-capped, which
+    * every raw-graph key builds in its own plan. */
+  private def edges(s: SparkSession, d: String): DataFrame =
+    cellPairs(s, d).select(col("src"), col("dst")).distinct()
+
+  /** Both directions of an undirected edge frame. */
+  private def both(e: DataFrame): DataFrame =
+    e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** [[both]] directions of [[edges]], for the traversal keys: their
+    * rounds are separate jobs, so the edge build is pinned (lazily — it
+    * materializes inside the key's first job) and every later round reads
+    * its blocks. */
+  private def symEdges(s: SparkSession, d: String): DataFrame =
+    both(edges(s, d).pinnedLazy)
 
   private val symSql =
     "sym AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e)"
 
   /** Strong (weight ≥ [[MinStrongWeight]]) edges — the sparsified graph
-    * the link-prediction and k-core keys run on; a committed SNAPSHOT like
-    * the raw co-occurrence graph (r11, was a per-execution pin): the
-    * capped pair build is the dominant cost and re-ran on every
-    * execution — bench reps and replays now read the parquet back. */
+    * the link-prediction and k-core keys run on. */
   private def strongEdges(s: SparkSession, d: String): DataFrame =
-    Scale.snapshotOnce(s, "graph_strong", d) {
-      val c = cells(s, d)
-      val ok = c.groupBy(col("hb"), col("event_type"))
-        .agg(count(lit(1)).as("cell_n"))
-        .filter(col("cell_n") <= MaxCellUsers)
-        .select(col("hb"), col("event_type"))
-      val c2 = c.join(ok, Seq("hb", "event_type"))
-      val a0 = c2.select(col("hb"), col("event_type"), col("user_id").as("src"))
-      val b0 = c2.select(col("hb"), col("event_type"), col("user_id").as("dst"))
-      a0.join(b0, Seq("hb", "event_type"))
-        .filter(col("src") < col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-        .filter(col("w") >= MinStrongWeight)
-        .select(col("src"), col("dst"))
-    }
+    cellPairs(s, d).groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
+      .filter(col("w") >= MinStrongWeight)
+      .select(col("src"), col("dst"))
 
   /** DuckDB twin of [[strongEdges]] + its symmetric view (CTE fragments;
     * compose after `cellsSql`). */
@@ -145,32 +134,28 @@ object GraphOps {
     * struct — a hash aggregate, not a sort window; (n, label) is unique
     * per u so the struct order is total). Pinned per round for the same
     * flat-lineage reason as BFS. Shared by `graph_label_prop` and
-    * `graph_community_stats`, so the converged label frame is a committed
-    * SNAPSHOT (the edge-snapshot discipline): the 3 iterative rounds run
-    * once per input dir; both consumers — and bench reps — read the
-    * parquet back. The snapshot also carries each node's ROUND-2 label
-    * (r13) so consumers can attest in-band whether the final round
-    * still changed anything — the constant-round contract made visible
-    * in the output instead of only in this comment. */
-  private def lpaLabels(s: SparkSession, d: String): DataFrame =
-    Scale.snapshotOnce(s, "graph_lpa", d) {
-      val sym = symEdges(s, d)
-      var lab = sym.select(col("src").as("u")).distinct()
-        .select(col("u"), col("u").as("label")).pinned
-      var prev = lab
-      for (_ <- 1 to 3) {
-        prev = lab
-        val votes = sym
-          .join(lab.withColumnRenamed("u", "dst"), "dst")
-          .groupBy(col("src").as("u"), col("label"))
-          .agg(count(lit(1)).as("n"))
-        lab = votes.groupBy(col("u"))
-          .agg(max_by(col("label"),
-            struct(col("n"), (-col("label")).as("nl"))).as("label"))
-          .pinned
-      }
-      lab.join(prev.withColumnRenamed("label", "label_prev"), "u")
+    * `graph_community_stats` over their [[symEdges]]. The frame also
+    * carries each node's ROUND-2 label (r13) so consumers can attest
+    * in-band whether the final round still changed anything — the
+    * constant-round contract made visible in the output instead of only
+    * in this comment. */
+  private def lpaLabels(sym: DataFrame): DataFrame = {
+    var lab = sym.select(col("src").as("u")).distinct()
+      .select(col("u"), col("u").as("label")).pinned
+    var prev = lab
+    for (_ <- 1 to 3) {
+      prev = lab
+      val votes = sym
+        .join(lab.withColumnRenamed("u", "dst"), "dst")
+        .groupBy(col("src").as("u"), col("label"))
+        .agg(count(lit(1)).as("n"))
+      lab = votes.groupBy(col("u"))
+        .agg(max_by(col("label"),
+          struct(col("n"), (-col("label")).as("nl"))).as("label"))
+        .pinned
     }
+    lab.join(prev.withColumnRenamed("label", "label_prev"), "u")
+  }
 
   /** 1-row broadcast convergence attestation over a [[lpaLabels]] frame:
     * TRUE iff round 3 changed no label (the scalar-broadcast pattern —
@@ -186,16 +171,13 @@ object GraphOps {
     "(SELECT COUNT(*) FROM l3 JOIN l2 ON l3.u = l2.u " +
       "AND l3.label <> l2.label) = 0 AS converged"
 
-  /** Committed TRUE-fixpoint component labels (user_id, component) — the
-    * shared iterate-and-publish behind `graph_cc_fixpoint` and
-    * `graph_wcc_sizes`: the star-algorithm rounds run once per input dir,
-    * every consumer (and bench rep) reads the parquet back. */
+  /** TRUE-fixpoint component labels (user_id, component) — the shared
+    * star-algorithm iteration behind `graph_cc_fixpoint` and
+    * `graph_wcc_sizes`. */
   private def ccLabels(s: SparkSession, d: String): DataFrame =
-    Scale.snapshotOnce(s, "graph_cc_fix", d) {
-      DedupOps.connectedComponents(
-        edges(s, d).select(col("src").as("doc_a"), col("dst").as("doc_b")))
-        .select(col("doc_id").as("user_id"), col("label").as("component"))
-    }
+    DedupOps.connectedComponents(
+      edges(s, d).select(col("src").as("doc_a"), col("dst").as("doc_b")))
+      .select(col("doc_id").as("user_id"), col("label").as("component"))
 
   /** DuckDB twin of [[ccLabels]]' fixpoint: recursive min-label
     * reachability walk over `sym` (compose under WITH RECURSIVE). */
@@ -379,8 +361,7 @@ object GraphOps {
     "graph_common_neighbors" -> Q(
       (s, d) => {
         val strong = strongEdges(s, d)
-        val sym = strong.unionByName(
-          strong.select(col("dst").as("src"), col("src").as("dst")))
+        val sym = both(strong)
         val deg = sym.groupBy(col("src").as("pivot"))
           .agg(count(lit(1)).as("deg"))
           .filter(col("deg") <= MaxPivotDegree)
@@ -433,9 +414,8 @@ object GraphOps {
     // still peels) and a longer one whose round 6 is still unstable.
     "graph_kcore_peel" -> Q(
       (s, d) => {
-        val strong = strongEdges(s, d)
-        val sym = strong.unionByName(
-          strong.select(col("dst").as("src"), col("src").as("dst")))
+        // pinned: the node list and the peel's own pin both read it
+        val sym = both(strongEdges(s, d).pinnedLazy)
         val nodes = sym.select(col("src")).distinct()
         kcorePeel(sym, nodes)
       },
@@ -460,7 +440,7 @@ object GraphOps {
     // standard community-detection baseline (Raghavan et al. 2007).
     "graph_label_prop" -> Q(
       (s, d) => {
-        val lab = lpaLabels(s, d)
+        val lab = lpaLabels(symEdges(s, d))
         lab.select(col("u").as("user_id"), col("label"))
           .crossJoin(broadcast(lpaConverged(lab)))
           .orderBy(col("user_id"))
@@ -478,7 +458,7 @@ object GraphOps {
     // Each triangle is still enumerated exactly once (the orientation is
     // acyclic and total), so the OUTPUT is identical to the naive id
     // orientation — only the join fan-out changes. Two keyed equi-joins
-    // over the sparsified snapshot, never a cartesian. Output node-sized:
+    // over the sparsified graph, never a cartesian. Output node-sized:
     // every strong-graph node with its triangle count (0 where none — the
     // sf0.001 fixture's strong graph is triangle-free, and like kcore the
     // frame must carry that answer rather than vanish), its symmetric
@@ -487,9 +467,9 @@ object GraphOps {
     // pair so both engines stay in integer space.
     "graph_triangle_count" -> Q(
       (s, d) => {
-        val e = strongEdges(s, d)
-        val deg = e.unionByName(
-            e.select(col("dst").as("src"), col("src").as("dst")))
+        // pinned: the degree pin's job and the triangle pin's job both read it
+        val e = strongEdges(s, d).pinnedLazy
+        val deg = both(e)
           .groupBy(col("src")).agg(count(lit(1)).as("degree"))
           .pinned
         val fwd = (col("dsrc") < col("ddst")) ||
@@ -543,7 +523,7 @@ object GraphOps {
     // oracle replays it (the label-prop determinism discipline applied to
     // the one graph metric everyone asks for). Same scale contract as the
     // other iterative keys: constant rounds, each one |E| keyed join +
-    // hash aggregate over the pinned co-occurrence snapshot, node-sized
+    // hash aggregate over the pinned co-occurrence edges, node-sized
     // state, nothing on the driver. DuckDB's SUM promotes to HUGEINT, so
     // the oracle casts the update back to BIGINT (the §7.4 overflow
     // pitfall, applied in reverse — values stay far below 2^63).
@@ -598,9 +578,7 @@ object GraphOps {
     // below). Pure integer min/LEAST, one |E| keyed join + hash agg per
     // round, node-sized state, nothing on the driver.
     "graph_hashmin_cc" -> Q(
-      (s, d) => Scale.snapshotOnce(s, "graph_flood3", d) {
-        // iterate-and-publish ONCE per corpus (r15, the ccLabels
-        // discipline): later reps read the committed parquet back.
+      (s, d) => {
         val sym = symEdges(s, d)
         var lab = sym.select(col("src").as("u")).distinct()
           .select(col("u"), col("u").as("label")).pinned
@@ -633,8 +611,8 @@ object GraphOps {
 
     // TRUE-fixpoint connected components (r13, the r12 verdict's #1):
     // alternating large-star/small-star (Kiveris et al., "Connected
-    // Components in MapReduce and Beyond") over the committed
-    // co-occurrence edge snapshot, run to an OBSERVED fixed point — the
+    // Components in MapReduce and Beyond") over the co-occurrence
+    // edges, run to an OBSERVED fixed point — the
     // shared DedupOps.connectedComponents kernel (each alternation is two
     // keyed |E| joins + min aggregates; the edge set halves its height
     // every pass, O(log d) rounds; convergence is detected by a
@@ -645,8 +623,7 @@ object GraphOps {
     // graph_hashmin_cc's 3-hop flood cannot give — and `converged` is an
     // explicit in-band attestation (structurally always TRUE: the
     // algorithm throws rather than emit partial labels, so downstream
-    // never has to infer convergence from a doc comment). The iterate-
-    // and-publish runs ONCE per input dir (snapshot discipline); the
+    // never has to infer convergence from a doc comment). The
     // oracle reaches the same fixpoint by a different route — DuckDB's
     // recursive min-label reachability walk (the llm_semantic_dedup_keep
     // pattern) — so the match certifies convergence, not round replay.
@@ -657,12 +634,10 @@ object GraphOps {
         "SELECT id AS user_id, MIN(label) AS component, TRUE AS converged " +
         "FROM walk GROUP BY id ORDER BY user_id")),
 
-    // Component-SIZE distribution off the shared fixpoint snapshot (r13)
+    // Component-SIZE distribution off the shared fixpoint labels (r13)
     // — the first thing anyone asks of a CC run ("one giant component or
-    // dust?", the percolation read on the co-occurrence graph), and the
-    // second consumer that justifies the committed ccLabels snapshot
-    // (the cluster-family discipline: one iterate-and-publish, every
-    // reader a parquet scan + two hash aggregates). All-integer,
+    // dust?", the percolation read on the co-occurrence graph): the
+    // ccLabels iteration plus two hash aggregates. All-integer,
     // histogram-sized output.
     "graph_wcc_sizes" -> Q(
       (s, d) => {
@@ -689,13 +664,14 @@ object GraphOps {
     // integer ingredients keeps both engines in integer space (the
     // rational-pair discipline of graph_triangle_count) AND survives the
     // 1e12-edge scale where the 4m·e_c cross-term would overflow BIGINT
-    // inside the engine. Shape: labels join the pinned edge snapshot
+    // inside the engine. Shape: labels join the pinned edge frame
     // twice (keyed on node id), then three hash aggregates — community-
     // sized output, nothing iterative beyond the shared LPA rounds.
     "graph_community_stats" -> Q(
       (s, d) => {
-        val lab = lpaLabels(s, d)
-        val e = edges(s, d)
+        val e = edges(s, d).pinnedLazy
+        val sym = both(e)
+        val lab = lpaLabels(sym)
         val le = e
           .join(lab.select(col("u").as("src"), col("label").as("la")), "src")
           .join(lab.select(col("u").as("dst"), col("label").as("lb")), "dst")
@@ -707,7 +683,7 @@ object GraphOps {
         val cutPer = cut.select(col("la").as("label"))
           .unionByName(cut.select(col("lb").as("label")))
           .groupBy(col("label")).agg(count(lit(1)).as("cut_edges"))
-        val deg = symEdges(s, d).groupBy(col("src").as("u"))
+        val deg = sym.groupBy(col("src").as("u"))
           .agg(count(lit(1)).as("d"))
         val sizes = lab.join(deg, "u").groupBy(col("label"))
           .agg(count(lit(1)).as("n_nodes"), sum(col("d")).as("deg_sum"))

@@ -14,13 +14,14 @@ object Scale {
     * folder in the driver's SparkFiles root, the per-application temp dir
     * that `SparkEnv.stop` deletes when the SparkContext stops. Scratch
     * therefore never outlives its application, so no path has to name the
-    * code version or the input's content. */
+    * code version or the input's content; [[resetScratch]] empties it
+    * sooner. */
   private def scratchRoot: java.io.File =
     new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(), "graft_scratch")
 
   /** The scratch directory of `name` over input dir `input` in the running
     * application — the one path function for layouts, fixtures, sinks and
-    * committed snapshots. */
+    * published epochs. */
   def scratchDir(name: String, input: String): String =
     new java.io.File(scratchRoot, s"${name}_${dirTag(input)}").toString
 
@@ -31,8 +32,8 @@ object Scale {
     * Scratch writes pass their resolved [[scratchDir]], so a new
     * SparkContext in the same JVM (a new root) never trusts a memo entry
     * whose files Spark deleted at stop. The write runs under its key's own
-    * lock, not inside the map's update, because writes nest: a publish may
-    * compose another key's snapshot.
+    * lock, not inside the map's update, because writes nest: a publish
+    * may itself lay out another memoized table.
     *
     * A memo HIT counts as a snapshot read: every caller reads the
     * materialized layout or publish back as its input, so a rep whose
@@ -45,6 +46,21 @@ object Scale {
       if (done.get) snapshotReads.incrementAndGet(): Unit
       else { write; done.set(true) }
     }
+  }
+
+  /** Deletes the running application's scratch files and forgets every
+    * [[writeOnce]], so the next call of any key writes from empty. Bench
+    * calls this before each timed rep: no rep then times the read-back of
+    * a write an earlier rep or key paid for. Not for use while another
+    * thread runs a key. */
+  def resetScratch(): Unit = {
+    scratchDone.clear()
+    deleteTree(scratchRoot)
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(deleteTree)
+    f.delete(): Unit
   }
 
   /** Stable short suffix tying a scratch resource NAME to its input: one
@@ -89,14 +105,7 @@ object Scale {
       val whConf = spark.conf.get("spark.sql.warehouse.dir")
       val whPath = Option(new java.net.URI(whConf).getPath)
         .filter(_.nonEmpty).getOrElse(whConf)
-      val wh = new java.io.File(whPath, tbl)
-      if (wh.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(wh)
-      }
+      deleteTree(new java.io.File(whPath, tbl))
       df.write.bucketBy(buckets, key).sortBy(key).saveAsTable(tbl)
     }
     if (memoKey.isEmpty) save()
@@ -224,8 +233,7 @@ object Scale {
     * (see [[pin]]'s capture-then-truncate note). A segment is the
     * executedPlan of a frame the moment BEFORE its lineage cut, so the
     * union of a key's segments + its final plan covers the whole logical
-    * chain exactly once — including snapshotOnce computes, whose
-    * committed read-back otherwise hides the compute plan forever. */
+    * chain exactly once. */
   private val auditBuf =
     new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.execution.SparkPlan]()
 
@@ -251,9 +259,9 @@ object Scale {
     * until storage pressure evicts hot data and recomputes stampede —
     * measured as 7–27× driver-bench spikes on the pin-heavy keys). Pins
     * are PER-KEY scratch by contract — no frame built by one registry key
-    * is consumed in-memory by another (cross-key sharing goes through
-    * [[snapshotOnce]]'s committed parquet instead) — so the Bench/Verify
-    * loops call this after each key's evaluation completes. Releases ONLY
+    * is consumed by another; a stage two keys share is built in each
+    * key's own plan — so the Bench/Verify loops call this after each
+    * key's evaluation completes. Releases ONLY
     * the registry entries [[pin]] created (r14 advice: a whole-context
     * sweep would also drop caches a HOST application created, and an
     * unpersisted localCheckpoint'd frame is unrecoverable — lineage is
@@ -282,35 +290,10 @@ object Scale {
     }
   }
 
-  /** Compute-once COMMITTED snapshot of an expensive shared frame, via
-    * KeepSetPublish's marker-last epoch protocol: the first caller per
-    * (name, input dir) in an application computes and publishes epoch 0;
-    * every later caller — a later rep, or another key composing the same
-    * stage — reads the committed parquet back without running any job. */
-  def snapshotOnce(spark: org.apache.spark.sql.SparkSession, name: String,
-      inputDir: String)(compute: => DataFrame): DataFrame = {
-    // plan-audit capture (r15): a committed snapshot hides its compute's
-    // plan from PlanAuditSpec exactly like a pin hides its upstream —
-    // under spark.graft.plan.audit the compute frame is BUILT (planning
-    // only; its own internal pins run as usual) and its plan recorded,
-    // while the commit/read-back protocol below stays untouched.
-    val audited: Option[DataFrame] =
-      if (spark.conf.getOption("spark.graft.plan.audit").contains("true")) {
-        val f = compute
-        recordForAudit(f)
-        Some(f)
-      } else None
-    val dir = scratchDir(s"snap_$name", inputDir)
-    writeOnce(dir)(graft.streaming.KeepSetPublish.publish(
-      audited.getOrElse(compute), dir, 0L): Unit)
-    graft.streaming.KeepSetPublish.readLatest(spark, dir)
-  }
-
   /** Count of [[writeOnce]] calls since the last drain that SERVED an
     * earlier write (memo hit, zero compute) instead of writing. Bench
     * drains this per key to label snapshot-backed timings in the artifact
-    * itself: runtime truth, not a hand-maintained list — the flag reflects
-    * what the timed rep actually did. */
+    * itself (after [[resetScratch]], a key that reads one shows up here). */
   private val snapshotReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** True iff any [[writeOnce]] call since the previous drain was a

@@ -36,4 +36,21 @@ class BenchOutSpec extends AnyFunSuite {
       assert(Bench.fmt3(0.0001) === "0")
     } finally java.util.Locale.setDefault(saved)
   }
+
+  test("summary line is short, parses and carries the run's counts") {
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (artifact <- Seq("bench_20260815T120000.json", "q\"uo\\te\t.json",
+        "x" * 255)) {
+      val line = Bench.summaryLine(1234.5678, 390, 2, 0, artifact)
+      assert(line.getBytes("UTF-8").length <= 1500, line)
+      assert(!line.contains("\n"))
+      val j = m.readTree(line)
+      assert(j.get("metric").asText === "total")
+      assert(j.get("value").asDouble === 1234.568)
+      assert(j.get("n").asInt === 390)
+      assert(j.get("failed").asInt === 2)
+      assert(j.get("snapshot_backed_n").asInt === 0)
+      assert(j.get("artifact").asText === artifact)
+    }
+  }
 }

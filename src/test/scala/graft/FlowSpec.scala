@@ -188,6 +188,22 @@ class FlowSpec extends SparkSpec {
     }
   }
 
+  test("unset flow dir: shipped flows load from the classpath; the conf wins") {
+    val R = graft.flow.FlowRegistry
+    assert(spark.conf.getOption("spark.graft.flow.dir").isEmpty)
+    val dir = R.registryDir(spark).toUri.toString
+    // the build's classpath copy, not conf/ under the working directory
+    assert(!dir.startsWith(java.nio.file.Paths.get("conf").toUri.toString), dir)
+    assert(R.run(spark, sf001, "daily_tier_rollup").count() > 0)
+    val own = java.nio.file.Files.createTempDirectory("flows")
+    java.nio.file.Files.write(own.resolve("daily_tier_rollup.json"),
+      """{"steps":[{"op":"read","table":"nation"}]}""".getBytes("UTF-8"))
+    spark.conf.set("spark.graft.flow.dir", own.toString)
+    try assert(R.available(spark) == Seq("daily_tier_rollup") &&
+      R.run(spark, sf001, "daily_tier_rollup").columns.contains("n_nationkey"))
+    finally spark.conf.unset("spark.graft.flow.dir")
+  }
+
   test("named ROUTING flow runs by name through the registry") {
     val branches = graft.flow.FlowRegistry.runRoutes(spark, sf001, "event_router")
     assert(branches.map(_._1) == Seq("revenue", "ops", "otherwise"))

@@ -3,9 +3,9 @@ package graft
 import graft.operators.Scale
 
 /** Pins for the conf-gated pin switch (Scale.pin / spark.graft.pin.mode)
-  * and the committed-snapshot compute-once contract (Scale.snapshotOnce).
-  * Cluster guidance lives in MIGRATION.md; here each mode must produce
-  * the same answers and the snapshot must never recompute on replay. */
+  * and the per-key pin lifecycle. Cluster guidance lives in MIGRATION.md;
+  * here each mode must produce the same answers, and a stage two keys
+  * share must be computed by each, never read from the other. */
 class PinModeSpec extends SparkSpec {
 
   private def withPinMode[A](mode: String)(body: => A): A = {
@@ -73,27 +73,15 @@ class PinModeSpec extends SparkSpec {
     } finally host.unpersist(blocking = true): Unit
   }
 
-  test("snapshotOnce computes once; replays and siblings read the commit") {
-    val input = java.nio.file.Files.createTempDirectory("snap_in").toString
-    var computes = 0
-    def call(n: Int) = Scale.snapshotOnce(spark, "spec_probe", input) {
-      computes += 1
-      spark.range(n).toDF("id")
+  test("consumers of a shared stage compute it: back-to-back keys read no snapshot") {
+    // graph_label_prop and graph_community_stats share the label-propagation
+    // rounds; each builds them in its own plan, so the second key must not
+    // read anything the first one wrote
+    Scale.drainSnapshotReads(): Unit
+    for (k <- Seq("graph_label_prop", "graph_community_stats")) {
+      assert(SparkEntry.queries(k)(spark, sf001).collect().nonEmpty, k)
+      assert(!Scale.drainSnapshotReads(), s"$k read a snapshot")
+      Scale.releasePins(spark)
     }
-    assert(call(5).count() == 5 && computes == 1)
-    // second call must NOT evaluate the compute thunk — the committed
-    // epoch satisfies it (so it returns the OLD 5 rows, not 9)
-    assert(call(9).count() == 5 && computes == 1)
-    // a sibling name sharing a prefix is its own snapshot
-    val other = Scale.snapshotOnce(spark, "spec_probe_other", input) {
-      spark.range(3).toDF("id")
-    }
-    assert(other.count() == 3)
-    assert(Scale.snapshotOnce(spark, "spec_probe", input) {
-      sys.error("must not recompute")
-    }.count() == 5)
-    assert(Scale.snapshotOnce(spark, "spec_probe_other", input) {
-      sys.error("must not recompute")
-    }.count() == 3)
   }
 }

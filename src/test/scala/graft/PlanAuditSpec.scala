@@ -182,9 +182,8 @@ class PlanAuditSpec extends SparkSpec {
     // each key's last pin — ~36 pin sites' upstream stages (e.g. the IVF
     // codebook crossJoins) were swept by nobody. Under
     // spark.graft.plan.audit=true every pin RECORDS its input's
-    // executedPlan segment before cutting as usual, and snapshotOnce
-    // records its compute's plan without forfeiting the commit protocol —
-    // so (segments + final plan) cover each key's whole logical chain
+    // executedPlan segment before cutting as usual — so (segments +
+    // final plan) cover each key's whole logical chain
     // exactly once and the same three anti-patterns are checked through
     // every lineage cut. Capture-then-truncate is the only shape that
     // scales: keeping lineage live across an iterate loop's rounds

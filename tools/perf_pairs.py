@@ -13,8 +13,11 @@ on the 1st, 3rd, ... seed), so drift over the session hits both alike.
 Prints, per metric of the final result line: each side's median and
 quartiles, the pairs the change wins, the median change relative to the
 base median and, for BENCHMARK.json's end-to-end metrics, that change as
-a fraction of the metric's bound (> 1 is a regression past the bound)
-and the median difference over the base's interquartile spread.
+a fraction of the metric's bound (> 1 is a regression past the bound),
+the median difference over the base's interquartile spread, and two
+verdicts: `claim` when a gain could be claimed (the change wins at least
+9 of 10 pairs and its median moved by more than the base's IQR) and
+`in`/`OUT` for whether the median stays inside the bound.
 """
 import argparse
 import json
@@ -66,8 +69,9 @@ def report(pairs, spec):
     for side, i in (("base", 0), ("change", 1)):
         bad = sum(1 for p in pairs if not p[i] or not p[i]["correct"] or p[i]["failed"])
         print(f"{side}: {bad} run(s) failed, incorrect or with failed operations")
-    print("%-28s %28s %28s %6s %8s %7s %7s" % (
-        "metric", "base q1/med/q3", "change q1/med/q3", "wins", "delta", "/bound", "/IQR"))
+    print("%-28s %28s %28s %6s %8s %7s %7s  %s" % (
+        "metric", "base q1/med/q3", "change q1/med/q3", "wins", "delta", "/bound", "/IQR",
+        "verdict"))
     for name in ok[0][0]["metrics"]:
         b = [p[0]["metrics"][name]["value"] for p in ok]
         c = [p[1]["metrics"][name]["value"] for p in ok]
@@ -78,11 +82,15 @@ def report(pairs, spec):
         delta = (cq[1] - bq[1]) / bq[1] if bq[1] else (0.0 if not diff else float("nan"))
         iqr = bq[2] - bq[0]
         spread = diff / iqr if iqr else (0.0 if not diff else float("inf"))
-        bound = ("%7.2f" % (-sign * delta / bounds[name]["bound"])
-                 if name in bounds else "%7s" % "-")
-        print("%-28s %28s %28s %3d/%-2d %+7.1f%% %s %7.2f" % (
+        bound, verdict = "%7s" % "-", ""
+        if name in bounds:
+            past = -sign * delta / bounds[name]["bound"]
+            claim = wins >= 0.9 * len(ok) and spread > 1
+            bound = "%7.2f" % past
+            verdict = "%s %s" % ("claim" if claim else "-", "OUT" if past > 1 else "in")
+        print("%-28s %28s %28s %3d/%-2d %+7.1f%% %s %7.2f  %s" % (
             name, "%.4g/%.4g/%.4g" % bq, "%.4g/%.4g/%.4g" % cq,
-            wins, len(ok), 100 * delta, bound, spread))
+            wins, len(ok), 100 * delta, bound, spread, verdict))
 
 
 def main():
