@@ -709,20 +709,20 @@ object RelationalOps {
     // the carried error value expires once it is more than 1 hour old.
     // Same single window pass as join_asof plus a running max of error
     // timestamps (in the processed order the running max IS the last
-    // error's ts) — the gap test is exact integer µs; no extra join, no
-    // second shuffle.
+    // error's ts), both frames in one select so they share one Window
+    // exec — the gap test is exact integer µs; no extra join, no second
+    // shuffle.
     "join_asof_tolerance" -> Q(
       (s, d) => {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
           .rowsBetween(Long.MinValue, 0)
         T(s, d, "events")
-          .withColumn("le_val",
+          .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
             last(when(col("event_type") === "error", col("value")),
-              ignoreNulls = true).over(w))
-          .withColumn("le_us",
+              ignoreNulls = true).over(w).as("le_val"),
             max(when(col("event_type") === "error", unix_micros(col("ts"))))
-              .over(w))
+              .over(w).as("le_us"))
           .select(col("event_id"), col("user_id"), col("event_type"),
             when(col("le_us") >= unix_micros(col("ts")) - 3600000000L,
               col("le_val")).as("last_error_value_1h"))
@@ -791,27 +791,22 @@ object RelationalOps {
     // As-of NEAREST direction (round-8 addendum): whichever of the latest
     // preceding / earliest following 'error' is closer in event time, tie
     // → the PRECEDING one (documented rule; exact integer µs so the tie
-    // test cannot wobble). Two frames over ONE window sort — the backward
-    // running (max ts, carried value) and its forward mirror — then a
-    // branch-free pick; still a single shuffle on user_id and no join.
+    // test cannot wobble). The four frames sit in one select, so Catalyst
+    // plans one Window exec per direction — the backward running (max ts,
+    // carried value) and its forward mirror — then a branch-free pick;
+    // still a single shuffle on user_id and no join.
     "join_asof_nearest" -> Q(
       (s, d) => {
         val wb = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
           .rowsBetween(Long.MinValue, 0)
+        val err = col("event_type") === "error"
         T.byKey(T(s, d, "events"), col("user_id"))
-          .withColumn("le_val",
-            last(when(col("event_type") === "error", col("value")),
-              ignoreNulls = true).over(wb))
-          .withColumn("le_us",
-            max(when(col("event_type") === "error", unix_micros(col("ts"))))
-              .over(wb))
-          .withColumn("ne_val",
-            last(when(col("event_type") === "error", col("value")),
-              ignoreNulls = true).over(forwardW))
-          .withColumn("ne_us",
-            min(when(col("event_type") === "error", unix_micros(col("ts"))))
-              .over(forwardW))
+          .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
+            last(when(err, col("value")), ignoreNulls = true).over(wb).as("le_val"),
+            max(when(err, unix_micros(col("ts")))).over(wb).as("le_us"),
+            last(when(err, col("value")), ignoreNulls = true).over(forwardW).as("ne_val"),
+            min(when(err, unix_micros(col("ts")))).over(forwardW).as("ne_us"))
           .select(col("event_id"), col("user_id"), col("event_type"),
             when(col("le_us").isNull, col("ne_val"))
               .when(col("ne_us").isNull, col("le_val"))

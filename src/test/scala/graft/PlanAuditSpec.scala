@@ -10,7 +10,11 @@ package graft
   *     shingle/span hashes) or a broadcast range join.
   *   - `ScalaUDF` / Python eval: the library's contract is zero UDFs in
   *     src/main — custom logic is native Catalyst expressions (codegen) or
-  *     HOFs, so a UDF in any plan is a regression by definition.
+  *     HOFs, so a UDF in any plan is a regression by definition. The one
+  *     sanctioned exception is the typed fold under the session-head keys
+  *     (`EventOps.sessionHeads`, `flatMapSortedGroups` over each user's
+  *     events): one sort and one pass per user, with no window state
+  *     (ROADMAP direction 4). Its plan shape is pinned below.
   *   - `BroadcastNestedLoopJoin` outside the whitelist below: BNLJ is the
   *     legitimate physical shape ONLY for a broadcast-tiny side under a
   *     genuine non-equi predicate; anywhere else it means an equi-key was
@@ -262,6 +266,44 @@ class PlanAuditSpec extends SparkSpec {
       val heavy = rec.stages.maxBy(_.runMs)
       assert(heavy.tasks == parts, s"$key: heaviest stage $heavy of ${rec.stages}")
     }
+  }
+
+  /** The keys that read `EventOps.sessionHeads`. */
+  private val sessionHeadKeys = Seq("evt_pattern_count", "evt_pattern_match",
+    "evt_pattern_measures", "evt_pattern_nonoverlap", "evt_pattern_permute",
+    "evt_pattern_quantified", "evt_pattern_within", "evt_top_paths")
+
+  test("each session-head key plans one sort on (user_id, ts, event_id) under the fold") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.{MapGroupsExec, SortExec}
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    def arrival(p: org.apache.spark.sql.execution.SparkPlan) = p match {
+      case s: SortExec => s.sortOrder.map(_.child).collect { case a: Attribute => a.name } ==
+        Seq("user_id", "ts", "event_id")
+      case _ => false
+    }
+    val bad = sessionHeadKeys.flatMap { key =>
+      val nodes = reachable(SparkEntry.queries(key)(spark, sf001).queryExecution.executedPlan)
+      val folds = nodes.collect { case m: MapGroupsExec => m }
+      Seq(
+        Option.when(folds.size != 1)(s"$key: ${folds.size} folds"),
+        Option.when(nodes.count(arrival) != 1 ||
+          folds.headOption.forall(f => reachable(f).count(arrival) != 1))(
+          s"$key: not one arrival sort under the fold"),
+        Option.when(nodes.exists(_.isInstanceOf[WindowExec]))(s"$key: Window"),
+        Option.when(nodes.exists(_.isInstanceOf[ObjectHashAggregateExec]))(
+          s"$key: ObjectHashAggregate")).flatten
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("the as-of keys plan one Window exec per frame direction") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    val want = Seq("join_asof_nearest" -> 2, "join_asof_tolerance" -> 1)
+    val got = want.map { case (key, _) => key -> reachable(SparkEntry.queries(key)(spark, sf001)
+      .queryExecution.executedPlan).count(_.isInstanceOf[WindowExec]) }
+    assert(got == want)
   }
 
   test("PlanDump counts exchange nodes of the pre-execution plan") {
